@@ -2,12 +2,22 @@
 Spark-style.
 
 The reference runs each iteration as a *separate Hadoop job*, re-reading input
-from HDFS and shipping parameters via ``--file``/jobconf. Here every algorithm
-is a driver loop over ONE cached DataFrame: parameters are folded into the
-next iteration's expressions as literals (Catalyst constant-folds them into
-codegen), sufficient statistics come back as a single collected row, and the
-dense solve runs in numpy on the driver (Chu et al. NIPS'06 summation form).
-At 100 TB the per-iteration cost is one scan of cached columnar batches and a
+from HDFS and shipping parameters via ``--file``/jobconf. Here each iterative
+trainer (``logreg_gd``, ``logreg_irls``, ``kmeans_fit``, ``gmm_em_1d``) is a
+driver loop over its OWN cached projection of the input — the feature and
+label columns cast to double — which it releases (``unpersist(blocking=True)``)
+when it returns or raises. A projection that is already cached when the
+trainer starts is read as is and left cached.
+
+Every iteration is exactly ONE Spark action: a Project computes the shared
+per-row term (σ(wᵀx), a GMM responsibility, a k-means assignment), one global
+aggregate sums the sufficient statistics over it, and the driver collects the
+single row; the row count rides in the first iteration's aggregate. Both
+nodes are built from SQL text (one ``selectExpr`` each) with the parameters as
+exact double literals (``_lit``), which Catalyst constant-folds into codegen —
+a few py4j calls per iteration instead of dozens of Column calls. The dense
+solve runs in numpy on the driver (Chu et al. NIPS'06 summation form). At
+100 TB the per-iteration cost is one scan of cached columnar batches and a
 shuffle of one sufficient-statistics row per partition — broadcast of the
 parameter vector is implicit in literal folding (use
 ``sparkContext.broadcast`` instead once parameters exceed plan-literal scale,
@@ -21,12 +31,81 @@ production MLlib path; tests assert the two agree.
 from __future__ import annotations
 
 import math
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 import numpy as np
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+# ------------------------------------------------------------- plan helpers
+def _lit(v: float | None) -> str:
+    """SQL text that Spark parses back to exactly the double ``v``: Python's
+    shortest round-trip ``repr`` with a ``D`` suffix, parenthesised when
+    negative so it can follow any operator. NaN and ±inf have no literal
+    form and go through a string cast; None is a typed NULL."""
+    if v is None:
+        return "CAST(NULL AS DOUBLE)"
+    v = float(v)
+    if math.isnan(v):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(v):
+        return "CAST('Infinity' AS DOUBLE)" if v > 0 else "CAST('-Infinity' AS DOUBLE)"
+    text = f"{v!r}D"
+    return f"({text})" if text.startswith("-") else text
+
+
+def _q(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _project(df: DataFrame, feature_cols: list[str], label_col: str | None = None) -> DataFrame:
+    """A trainer's own input: features cast to double as ``x1..xd`` (``x0``
+    is the implicit intercept 1.0, never materialised) and the label as
+    ``y``."""
+    exprs = [f"CAST({_q(c)} AS DOUBLE) AS x{i}" for i, c in enumerate(feature_cols, 1)]
+    if label_col is not None:
+        exprs.append(f"CAST({_q(label_col)} AS DOUBLE) AS y")
+    return df.selectExpr(*exprs)
+
+
+@contextmanager
+def _owned_cache(df: DataFrame):
+    """``df`` cached for the block, and released (blocking) on exit — only
+    if this call cached it: a plan that was already cached stays cached."""
+    owned = df.storageLevel == StorageLevel.NONE
+    if owned:
+        df.cache()
+    try:
+        yield df
+    finally:
+        if owned:
+            df.unpersist(blocking=True)
+
+
+def _stats_row(trainer: str, stats: DataFrame):
+    """The one row of a global aggregate of sums. A null sum means no row
+    contributed to it: the input is empty (or all null)."""
+    row = stats.collect()[0]
+    if any(v is None for v in row):
+        raise ValueError(f"{trainer}: no rows to fit (empty input or only nulls)")
+    return row
+
+
+def _times(term: str, *idx: int) -> str:
+    """``term * x_i * …`` left to right; the intercept ``x0`` is 1.0, so its
+    factor is dropped (multiplying by 1.0 is exact)."""
+    return " * ".join([term] + [f"x{i}" for i in idx if i])
+
+
+def _sigmoid(w: np.ndarray) -> str:
+    """The select item ``s`` = σ(wᵀx), with ``x0`` = 1 and wᵀx summed left
+    to right."""
+    z = " + ".join([_lit(w[0])] + [f"{_lit(wi)} * x{i}" for i, wi in enumerate(w[1:], 1)])
+    return f"1.0D / (1.0D + EXP(-({z}))) AS s"
 
 
 # ---------------------------------------------------------------- linear reg
@@ -44,7 +123,7 @@ def linreg_normal(df: DataFrame, feature_cols: list[str], label_col: str) -> np.
             aggs.append(F.sum(feats[i] * feats[j]).alias(f"g_{i}_{j}"))
     for i in range(p):
         aggs.append(F.sum(feats[i] * y).alias(f"b_{i}"))
-    row = df.agg(*aggs).collect()[0]
+    row = _stats_row("linreg_normal", df.agg(*aggs))
     G = np.zeros((p, p))
     for i in range(p):
         for j in range(i, p):
@@ -62,20 +141,21 @@ def logreg_gd(
     iters: int = 10,
 ) -> np.ndarray:
     """Full-batch gradient descent for logistic regression (intercept
-    included). Each step: fold current weights into a σ(wᵀx) expression,
-    aggregate the gradient Σ(σ−y)·x, update on the driver. The reference
-    resubmits a MapReduce job per step; here the input is cached once."""
-    feats = [F.lit(1.0)] + [F.col(c).cast("double") for c in feature_cols]
-    y = F.col(label_col).cast("double")
-    w = np.zeros(len(feats))
-    df = df.cache()
-    n = df.count()  # materializes the cache
-    for _ in range(iters):
-        z = sum(float(wi) * fi for wi, fi in zip(w, feats))
-        sigma = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-        grads = [F.sum((sigma - y) * fi).alias(f"g{i}") for i, fi in enumerate(feats)]
-        row = df.agg(*grads).collect()[0]
-        w = w - lr * np.array([row[f"g{i}"] for i in range(len(feats))]) / n
+    included). Each step: fold current weights into σ(wᵀx), aggregate the
+    gradient Σ(σ−y)·x, update on the driver with the mean gradient (n =
+    every input row, counted by the first step). The reference resubmits a
+    MapReduce job per step; here the projected input is cached once."""
+    p = len(feature_cols) + 1
+    grads = [f"sum({_times('(s - y)', i)}) AS g{i}" for i in range(p)]
+    w = np.zeros(p)
+    n = None
+    with _owned_cache(_project(df, feature_cols, label_col)) as pts:
+        for _ in range(iters):
+            aggs = grads if n is not None else grads + ["count(1) AS n"]
+            row = _stats_row("logreg_gd", pts.selectExpr("*", _sigmoid(w)).selectExpr(*aggs))
+            if n is None:
+                n = row["n"]
+            w = w - lr * np.array([row[f"g{i}"] for i in range(p)]) / n
     return w
 
 
@@ -94,32 +174,19 @@ def logreg_irls(
     scale-invariant shuffle), then solves the dense (p+1)-system on the
     driver. Converges in ~4 steps where GD needs hundreds; the tiny ridge
     keeps the solve stable if the Hessian is near-singular."""
-    feats = [F.lit(1.0)] + [F.col(c).cast("double") for c in feature_cols]
-    y = F.col(label_col).cast("double")
-    p = len(feats)
+    p = len(feature_cols) + 1
+    pairs = [(i, j) for i in range(p) for j in range(i, p)]
+    aggs = [f"sum({_times('(s - y)', i)}) AS g{i}" for i in range(p)]
+    aggs += [f"sum({_times('s * (1.0D - s)', i, j)}) AS h_{i}_{j}" for i, j in pairs]
     w = np.zeros(p)
-    df = df.cache()
-    df.count()  # materializes the cache
-    for _ in range(iters):
-        z = sum(float(wi) * fi for wi, fi in zip(w, feats))
-        sigma = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-        aggs = [
-            F.sum((sigma - y) * fi).alias(f"g{i}") for i, fi in enumerate(feats)
-        ]
-        for i in range(p):
-            for j in range(i, p):
-                aggs.append(
-                    F.sum(sigma * (1.0 - sigma) * feats[i] * feats[j]).alias(
-                        f"h_{i}_{j}"
-                    )
-                )
-        row = df.agg(*aggs).collect()[0]
-        g = np.array([row[f"g{i}"] for i in range(p)])
-        H = np.zeros((p, p))
-        for i in range(p):
-            for j in range(i, p):
+    with _owned_cache(_project(df, feature_cols, label_col)) as pts:
+        for _ in range(iters):
+            row = _stats_row("logreg_irls", pts.selectExpr("*", _sigmoid(w)).selectExpr(*aggs))
+            g = np.array([row[f"g{i}"] for i in range(p)])
+            H = np.zeros((p, p))
+            for i, j in pairs:
                 H[i, j] = H[j, i] = row[f"h_{i}_{j}"]
-        w = w - np.linalg.solve(H + ridge * np.eye(p), g)
+            w = w - np.linalg.solve(H + ridge * np.eye(p), g)
     return w
 
 
@@ -131,38 +198,38 @@ def kmeans_fit(
     iters: int = 5,
 ) -> tuple[list[tuple[float, ...]], list[int]]:
     """Lloyd's algorithm: assignment is a pure-expression argmin over the
-    current centroids (ties → lowest id), the update is one groupBy over the
-    cached points. Returns (centroids, cluster sizes). Empty clusters keep
-    their previous centroid — same policy as MLlib."""
-    pts = df.select(*[F.col(c).cast("double").alias(c) for c in feature_cols]).cache()
+    current centroids, the update is one global aggregate of per-cluster
+    counts and means over the cached points. Returns (centroids, cluster
+    sizes). Empty clusters keep their previous centroid — same policy as
+    MLlib.
+
+    The argmin is the least (null?, distance, id) struct: ties go to the
+    lowest id, a null distance never wins, and a row whose distance to
+    centroid 0 is null (a null feature) goes to cluster 0 — the rules of
+    the ``kmeans_assign`` CASE chain."""
     cents = [tuple(map(float, c)) for c in init_centroids]
-    k = len(cents)
+    k, d = len(cents), len(feature_cols)
+    aggs = [f"count_if(c = {i}) AS n{i}" for i in range(k)]
+    aggs += [f"avg(IF(c = {i}, x{j}, NULL)) AS m{i}_{j}" for i in range(k) for j in range(1, d + 1)]
+    keys = ", ".join(
+        f"named_struct('z', {'false' if i == 0 else f'd{i} IS NULL'}, 'd', d{i}, 'c', {i})"
+        for i in range(k)
+    )
+    assign = f"LEAST({keys}).c AS c" if k > 1 else "0 AS c"
     sizes = [0] * k
-    for _ in range(iters):
-        dists = [
-            sum((F.col(c) - ci) * (F.col(c) - ci) for c, ci in zip(feature_cols, cent))
-            for cent in cents
-        ]
-        assign = F.lit(0)
-        best = dists[0]
-        for i in range(1, k):
-            assign = F.when(dists[i] < best, i).otherwise(assign)
-            best = F.when(dists[i] < best, dists[i]).otherwise(best)
-        stats = (
-            pts.withColumn("c", assign)
-            .groupBy("c")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                *[F.avg(c).alias(f"m_{c}") for c in feature_cols],
-            )
-            .collect()
-        )
-        new_cents = list(cents)
-        sizes = [0] * k
-        for r in stats:
-            new_cents[r["c"]] = tuple(r[f"m_{c}"] for c in feature_cols)
-            sizes[r["c"]] = r["n"]
-        cents = new_cents
+    with _owned_cache(_project(df, feature_cols)) as pts:
+        for _ in range(iters):
+            dists = [
+                " + ".join(f"(x{j} - {_lit(cj)}) * (x{j} - {_lit(cj)})" for j, cj in enumerate(cent, 1))
+                + f" AS d{i}"
+                for i, cent in enumerate(cents)
+            ]
+            row = pts.selectExpr("*", *dists, assign).selectExpr(*aggs).collect()[0]
+            sizes = [row[f"n{i}"] for i in range(k)]
+            cents = [
+                tuple(row[f"m{i}_{j}"] for j in range(1, d + 1)) if sizes[i] else cents[i]
+                for i in range(k)
+            ]
     return cents, sizes
 
 
@@ -178,48 +245,46 @@ def gmm_em_1d(df: DataFrame, col: str, init: Gmm1D, iters: int = 5) -> Gmm1D:
     """EM for a two-component 1-D Gaussian mixture. E-step responsibilities
     and the M-step sufficient statistics (Σr, Σr·x, Σr·x²) are ONE
     aggregation; parameter updates are scalar math on the driver."""
-    x = F.col(col).cast("double")
+    stats = [
+        "sum(r) AS n1",
+        "sum(r * x1) AS sx1",
+        "sum(r * x1 * x1) AS sxx1",
+        "sum((1.0D - r) * x1) AS sx2",
+        "sum((1.0D - r) * x1 * x1) AS sxx2",
+    ]
     params = init
-    cached = df.select(x.alias("_x")).cache()
-    n = cached.count()
-    x = F.col("_x")
-    for _ in range(iters):
-
-        def pdf(pi, mu, s):
-            return (
-                pi
-                * F.exp(-F.pow((x - mu) / s, 2) / 2.0)
-                / (s * math.sqrt(2 * math.pi))
+    n = None
+    with _owned_cache(_project(df, [col])) as pts:
+        for _ in range(iters):
+            dens = [
+                f"{_lit(pi)} * EXP(-POWER((x1 - {_lit(mu)}) / {_lit(s)}, 2.0D) / 2.0D)"
+                f" / {_lit(s * math.sqrt(2 * math.pi))} AS p{c}"
+                for c, (pi, mu, s) in enumerate(zip(params.pi, params.mu, params.sigma), 1)
+            ]
+            aggs = stats if n is not None else stats + ["count(1) AS n"]
+            row = _stats_row(
+                "gmm_em_1d", pts.selectExpr("x1", *dens, "p1 / (p1 + p2) AS r").selectExpr(*aggs)
             )
-
-        p1 = pdf(params.pi[0], params.mu[0], params.sigma[0])
-        p2 = pdf(params.pi[1], params.mu[1], params.sigma[1])
-        r1 = p1 / (p1 + p2)
-        row = cached.agg(
-            F.sum(r1).alias("n1"),
-            F.sum(r1 * x).alias("sx1"),
-            F.sum(r1 * x * x).alias("sxx1"),
-            F.sum((1 - r1) * x).alias("sx2"),
-            F.sum((1 - r1) * x * x).alias("sxx2"),
-        ).collect()[0]
-        n1 = row["n1"]
-        n2 = n - n1
-        mu1, mu2 = row["sx1"] / n1, row["sx2"] / n2
-        var1 = max(row["sxx1"] / n1 - mu1 * mu1, 1e-9)
-        var2 = max(row["sxx2"] / n2 - mu2 * mu2, 1e-9)
-        params = Gmm1D(
-            pi=(n1 / n, n2 / n),
-            mu=(mu1, mu2),
-            sigma=(math.sqrt(var1), math.sqrt(var2)),
-        )
+            if n is None:
+                n = row["n"]
+            n1 = row["n1"]
+            n2 = n - n1
+            mu1, mu2 = row["sx1"] / n1, row["sx2"] / n2
+            var1 = max(row["sxx1"] / n1 - mu1 * mu1, 1e-9)
+            var2 = max(row["sxx2"] / n2 - mu2 * mu2, 1e-9)
+            params = Gmm1D(
+                pi=(n1 / n, n2 / n),
+                mu=(mu1, mu2),
+                sigma=(math.sqrt(var1), math.sqrt(var2)),
+            )
     return params
 
 
 # -------------------------------------------------------------- naive Bayes
 def gaussian_nb_fit(df: DataFrame, label_col: str, feature_col: str):
     """Gaussian naive Bayes: per-class (prior, mean, variance) in one pass —
-    the reference's NB job. Returns {class: (prior, mean, var)}."""
-    n = df.count()
+    the reference's NB job. Returns {class: (prior, mean, var)}; the prior's
+    denominator is the sum of the class counts, so the fit is one action."""
     rows = (
         df.groupBy(label_col)
         .agg(
@@ -229,6 +294,7 @@ def gaussian_nb_fit(df: DataFrame, label_col: str, feature_col: str):
         )
         .collect()
     )
+    n = sum(r["n"] for r in rows)
     return {r[label_col]: (r["n"] / n, r["mu"], r["var"]) for r in rows}
 
 
