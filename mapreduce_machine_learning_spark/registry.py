@@ -269,43 +269,6 @@ RECHECK_PRIORITY: tuple[str, ...] = (
 )
 
 
-# Queries whose physical plans were REWRITTEN in an optimization round but
-# which have no post-rewrite driver oracle row yet, so their post-change
-# evidence is builder-run only (VERDICT r13 "Next round" #1). They jump the
-# rotation queue — right behind the RECHECK_PRIORITY flagships — until a
-# recheck-era driver row from a round AFTER POST_REWRITE_ROUND lands; then
-# the pin self-expires and they rejoin the normal least-recently-rechecked
-# rotation. Cost: the rotating window temporarily narrows (32 → 18 slots
-# while all 14 pins are live — one round; the r13 six and the r14 eight all
-# retire on their CORRECTNESS_r14 rows), after which the cadence math above
-# RECHECK_ERA_START resumes unchanged.
-POST_REWRITE_RECHECK: tuple[str, ...] = (
-    # rewritten in optimization round 13 (VERDICT r13 #1)
-    "q_ml_gbdt_iter2",
-    "q_ml_crossval",
-    "q_ml_conformal",
-    "q_win_leaderboard",
-    "q_sketch_countmin",
-    "q_graph_components",
-    # rewritten in optimization round 14 (same evidence rule: a driver row
-    # from round ≥ 14 is post-rewrite for these too, since the driver's
-    # r14 window runs after the round-14 sessions close)
-    "q_ml_spearman",
-    "q_events_cooccur",
-    "q_events_assoc_rules",
-    "q_profile_columns",
-    "q_sketch_kmv_setops",
-    "q_profile_fd",
-    "q_ann_ivf",
-    "q_ann_recall",
-)
-# rows at or before this round predate the rewrites; the pin holds until a
-# LATER row lands (r13 rewrites had no r13 row — that was the gap — and the
-# r14 rewrites landed before the driver's r14 run, so round 14 rows retire
-# both groups)
-POST_REWRITE_ROUND = 13
-
-
 def _ordered(queries: dict[str, QueryFn]) -> dict[str, QueryFn]:
     """Registration order for the driver: contract-first, never-green-first.
 
@@ -331,7 +294,6 @@ def _ordered(queries: dict[str, QueryFn]) -> dict[str, QueryFn]:
     contract_rank = {name: i for i, name in enumerate(CONTRACT_QUERIES)}
     priority_rank = {name: i for i, name in enumerate(EXTENSION_PRIORITY)}
     recheck_rank = {name: i for i, name in enumerate(RECHECK_PRIORITY)}
-    rewrite_rank = {name: i for i, name in enumerate(POST_REWRITE_RECHECK)}
     reg_rank = {name: i for i, name in enumerate(queries)}
 
     def key(name: str) -> tuple:
@@ -343,10 +305,6 @@ def _ordered(queries: dict[str, QueryFn]) -> dict[str, QueryFn]:
             return (2, 0, 0, reg_rank[name])
         if name in recheck_rank:
             return (3, 0, 0, recheck_rank[name])
-        if name in rewrite_rank and last.get(name, 0) <= POST_REWRITE_ROUND:
-            # plan rewritten in POST_REWRITE_ROUND, no post-rewrite driver
-            # row yet: pinned behind the flagships until one lands
-            return (3, 1, 0, rewrite_rank[name])
         if name in contract_rank:
             return (4, last.get(name, 0), 0, contract_rank[name])
         return (4, last.get(name, 0), 1, reg_rank[name])
