@@ -7,8 +7,9 @@ Design for cross-engine determinism: the MinHash family is built from
 signatures, band keys, and candidate sets agree exactly (no engine-internal
 hash functions anywhere).
 
-Scale design: MinHash-LSH is the 100 TB dedup path — signatures are one
-explode+groupBy (shuffle keyed on doc_id), banding is a groupBy on the band
+Scale design: MinHash-LSH is the 100 TB dedup path — signatures and band
+keys are one Arrow map over the document scan (no shuffle; each distinct
+token of a batch is hashed once per seed), banding is a groupBy on the band
 key, and only candidate *buckets* ever join, never all pairs. The brute-force
 cosine queries are the exact baselines; the blocked/banded variants are the
 scale path.
@@ -57,37 +58,110 @@ def q_llm_dedup_exact(spark, sf_dir):
     )
 
 
-def _signatures(spark, sf_dir):
-    """doc_id → 16 MinHash signatures: sig_i = MIN(md5('sNN|' || token))."""
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(s + "|"), F.col("token")))).alias(f"sig{i}")
-        for i, s in enumerate(SEEDS)
-    ]
-    # repartition by doc_id BEFORE the hash work: the documents file is small
-    # enough to arrive as one input split, which would serialize ~16·tokens
-    # md5 computations onto one core. The shuffle moves only the raw docs,
-    # spreads the md5-heavy explode across the cluster, and already satisfies
-    # the groupBy(doc_id) partitioning (no second exchange).
-    #
-    # Partition count is SCALE-ADAPTIVE (optimization r13, guide §2):
-    # 2× the cluster's default parallelism, floored at the 64 every
-    # local[32] measurement in BENCH_r01–r12 used (64 = 2×32 cores, so
-    # the local bench number is byte-identical) — a fixed 64 would cap
-    # the md5 stage's parallelism on any cluster wider than 32 cores.
-    n_parts = max(64, 2 * spark.sparkContext.defaultParallelism)
-    #
-    # dropDuplicates BEFORE the 16 md5s: hash partitioning on doc_id
-    # satisfies the (doc_id, token) clustering, so the dedup aggregate is
-    # exchange-free — it costs one partition-local hash-agg and repays it by
-    # shrinking the md5 workload by the token repetition factor (the min-agg
-    # result is identical either way, MIN being idempotent under dups).
-    raw = (
-        T(spark, sf_dir, "documents")
-        .repartition(n_parts, F.col("doc_id"))
-        .select("doc_id", F.explode(F.split("text", " ")).alias("token"))
-        .dropDuplicates(["doc_id", "token"])
+BANDS_SCHEMA = "doc_id long, band_id int, band_key string"
+
+
+def minhash_band_keys(text):
+    """The SQL-expression form of a text's N_BANDS band keys, as one array
+    Column: sig_i = array_min(transform(distinct tokens, t → md5(seed|t)))
+    row-wise, band key = md5 of its ROWS_PER_BAND concatenated signatures.
+    Stateless (no explode, no aggregate), so the streaming ingest probe
+    uses it per micro-batch; MIN over a token multiset equals MIN over its
+    distinct set, so it agrees with the oracle's DISTINCT→MIN aggregation
+    and with `minhash_band_batches` (tests/test_minhash_kernel.py). Null
+    text gives an array of null keys."""
+    toks = F.array_distinct(F.split(text, " "))
+
+    def sig_expr(seed):
+        # single-arg lambda: a 2-arg transform lambda would receive the
+        # element INDEX as its second argument
+        return F.array_min(
+            F.transform(
+                toks, lambda t: F.md5(F.concat(F.lit(seed + "|"), t))
+            )
+        )
+
+    sigs = [sig_expr(s) for s in SEEDS]
+    return F.array(
+        *[
+            F.md5(
+                F.concat(
+                    *[sigs[b * ROWS_PER_BAND + r] for r in range(ROWS_PER_BAND)]
+                )
+            )
+            for b in range(N_BANDS)
+        ]
     )
-    return raw.groupBy("doc_id").agg(*aggs)
+
+
+def _make_band_kernel(seeds, n_bands, rows_per_band):
+    """Build the Arrow-batch band kernel (`mapInPandas`, schema
+    BANDS_SCHEMA): the band rows of a (doc_id, text) frame, n_bands per
+    doc with non-null text. Each DISTINCT token of the batch is md5'd once
+    per seed, not each occurrence: a 10k-doc batch repeats its tokens
+    ~8,700x on the 31-token testdata and 11-22x on the 20k-vocabulary
+    scaling corpus (tools/gen_scaling_corpus.py), and the md5 count grows
+    with the batch's distinct tokens; a doc's signature is the minimum
+    of its tokens' digest ranks (`np.minimum.reduceat` over the
+    doc-contiguous token runs), mapped back to the digest. Hex digests
+    have equal length, so rank order is the byte order Spark's and
+    DuckDB's MIN use. Splitting on " " keeps empty tokens exactly like
+    Spark's `split`. Built as a closure so Spark ships it by value and
+    the Python workers never import this package."""
+
+    def kernel(it):
+        import hashlib
+        from itertools import chain
+
+        import numpy as np
+        import pandas as pd
+
+        for pdf in it:
+            pdf = pdf[pdf["text"].notna()]
+            if not len(pdf):  # reduceat/argsort need at least one token
+                continue
+            toks = [t.split(" ") for t in pdf["text"]]
+            lens = np.fromiter(map(len, toks), np.int64, len(toks))
+            starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
+            codes, vocab = pd.factorize(
+                np.array(list(chain.from_iterable(toks)), dtype=object)
+            )
+            digests = np.array(
+                [
+                    [hashlib.md5(f"{s}|{v}".encode()).hexdigest() for v in vocab]
+                    for s in seeds
+                ]
+            )  # (seeds, vocab)
+            order = np.argsort(digests, axis=1)
+            # one seed at a time: peak memory is one token-length vector,
+            # not a (seeds × tokens) matrix
+            sigs = np.empty((len(seeds), len(pdf)), dtype=digests.dtype)
+            for s in range(len(seeds)):
+                rank = np.empty(len(vocab), dtype=np.int32)
+                rank[order[s]] = np.arange(len(vocab), dtype=np.int32)
+                min_rank = np.minimum.reduceat(rank[codes], starts)
+                sigs[s] = digests[s, order[s, min_rank]]
+            keys = [
+                hashlib.md5("".join(row).encode()).hexdigest()
+                for b in range(n_bands)
+                for row in sigs[b * rows_per_band : (b + 1) * rows_per_band].T
+            ]
+            yield pd.DataFrame(
+                {
+                    "doc_id": np.tile(pdf["doc_id"].to_numpy(), n_bands),
+                    "band_id": np.repeat(
+                        np.arange(n_bands, dtype=np.int32), len(pdf)
+                    ),
+                    "band_key": keys,
+                }
+            )
+
+    return kernel
+
+
+# the engine's band kernel; `_bands` is its only production caller and
+# tests/test_minhash_kernel.py pins it to `minhash_band_keys`
+minhash_band_batches = _make_band_kernel(SEEDS, N_BANDS, ROWS_PER_BAND)
 
 
 # Session-scoped materialization of shared intermediates (delegates to
@@ -104,32 +178,44 @@ from mapreduce_machine_learning_spark.runtime import (  # noqa: E402
 )
 
 
-def _bands(spark, sf_dir):
-    """(doc_id, band_id, band_key): band key = md5 of its 4 concatenated
-    signature rows. One posexplode over an array of the 4 band keys — a
-    single pass over the signature aggregate (the earlier 4-way union of
-    projections made Spark re-run the 16-min aggregation once per band).
-    Materialized once per session: 4 rows/doc of (id, band, 32-char key)."""
+def _bands(spark, sf_dir, by_doc=False):
+    """(doc_id, band_id, band_key), N_BANDS rows per doc: one
+    `minhash_band_batches` pass over the scan's own split. No repartition
+    ahead of it — the kernel needs no co-location, and on local[4] the
+    same kernel behind a 64-way doc_id repartition took 5.2 s per cold
+    sf0.1 collect (64 Python tasks) vs 0.65 s on the scan split. A
+    one-row-group parquet file is one non-empty split, so the kernel runs
+    as one Python task; it still beats the old 4-core JVM plan at 64x the
+    scaling corpus (band table 25 s vs 40 s, CHANGES.md).
+    Materialized once per session: 4 rows/doc of (id, band, 32-char
+    key).
+
+    ``by_doc=True`` gives the same rows hash-partitioned on doc_id, for
+    the near-dup band self-join: a broadcast band join keeps its stream
+    side's partitioning, so the `.distinct()` over the pair stream (12.5M
+    join rows at sf0.1) needs no exchange, and `q_llm_neardup_pairs`
+    runs in ~16.5 s instead of ~25 s on local[32] over 4 cores. It is
+    materialized too, so the exchange runs once per session; 2× the
+    default parallelism, floored at 64, keeps the distinct spread over
+    the cluster."""
 
     def build():
-        sigs = _signatures(spark, sf_dir)
-        band_keys = [
-            F.md5(
-                F.concat(
-                    *[
-                        F.col(f"sig{b * ROWS_PER_BAND + r}")
-                        for r in range(ROWS_PER_BAND)
-                    ]
-                )
-            )
-            for b in range(N_BANDS)
-        ]
-        return sigs.select(
-            "doc_id",
-            F.posexplode(F.array(*band_keys)).alias("band_id", "band_key"),
+        return (
+            T(spark, sf_dir, "documents")
+            .select("doc_id", "text")
+            .mapInPandas(minhash_band_batches, schema=BANDS_SCHEMA)
         )
 
-    return _materialize(spark, sf_dir, "bands", build)
+    bands = _materialize(spark, sf_dir, "bands", build)
+    if not by_doc:
+        return bands
+    n_parts = max(64, 2 * spark.sparkContext.defaultParallelism)
+    return _materialize(
+        spark,
+        sf_dir,
+        "bands_by_doc",
+        lambda: bands.repartition(n_parts, "doc_id"),
+    )
 
 
 _SIG_SQL = ",\n               ".join(
@@ -171,8 +257,9 @@ def q_llm_minhash(spark, sf_dir):
     """MinHash + LSH banding (k=16 hashes, 4 bands × 4 rows, SURVEY §2.9
     seeds): emits every band bucket holding >1 doc — the candidate groups.
     The md5-based hash family makes signatures engine-portable. Pipeline:
-    explode→distinct (shuffle on (doc,token)) → 16-way min-agg (shuffle on
-    doc) → band groupBy; nothing ever compares all pairs."""
+    one `minhash_band_batches` map over the document scan (signatures and
+    band keys, no shuffle) → band groupBy (the plan's only exchange);
+    nothing ever compares all pairs."""
     return (
         _bands(spark, sf_dir)
         .groupBy("band_id", "band_key")
@@ -251,8 +338,8 @@ def _cand_pairs(spark, sf_dir):
     def build():
         # the band table is itself memoized (_bands), so Catalyst's two
         # scans of the self-join subtree read a materialized RDD — the
-        # explode + 16-way md5 min-agg signature pipeline never runs twice
-        bands = _bands(spark, sf_dir)
+        # Python band kernel never runs twice
+        bands = _bands(spark, sf_dir, by_doc=True)
         a = bands.alias("a")
         b = bands.alias("b")
         return (
@@ -346,8 +433,8 @@ def _band_candidate_ids(bands, id_col="doc_id", split=None):
     bucket sizes are a partial-aggregated groupBy over the (persisted)
     band table; the bucket list joins back hint-free (AQE broadcasts it
     at this scale; at 100 TB it degrades to a shuffle join on the band
-    key, still linear); the final distinct runs exchange-free because
-    the band table is already hash-partitioned by doc_id.
+    key, still linear); the final distinct runs exchange-free when the
+    band table is hash-partitioned by doc_id (`_bands(by_doc=True)`).
 
     For a TWO-SIDED candidate stream (the incremental inc×ex dedup) pass
     ``split``: a boolean Column over the band table marking the incoming
@@ -574,7 +661,7 @@ def _neardup_pairs_plan(spark, sf_dir):
     cand = _cand_pairs(spark, sf_dir)
     verified = _verified_jaccard(
         T(spark, sf_dir, "documents"), cand, "doc_a", "doc_b",
-        cand_ids=_band_candidate_ids(_bands(spark, sf_dir)),
+        cand_ids=_band_candidate_ids(_bands(spark, sf_dir, by_doc=True)),
     )
     return (
         verified.select("doc_a", "doc_b", r6(F.col("jac")).alias("jaccard"))

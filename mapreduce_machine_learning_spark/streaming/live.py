@@ -189,44 +189,26 @@ def incremental_dedup_probe_stream(
     stream-static equi-join — the live ingest-dedup shape.
 
     The row-wise signature is the stateless reformulation the streaming
-    context forces: sig_i = array_min(transform(tokens, t → md5(seed|t)))
-    needs no explode/groupBy (no aggregation state, no watermark), and is
-    value-identical to the batch explode→MIN aggregation because MIN over a
-    token multiset equals MIN over its distinct set. The static side is the
+    context forces: `llm.minhash_band_keys` (sig_i = array_min(transform(
+    tokens, t → md5(seed|t)))) needs no explode/groupBy (no aggregation
+    state, no watermark), and is value-identical to the batch band kernel
+    (tests/test_minhash_kernel.py pins the two). The static side is the
     same band table the batch pipeline maintains; at scale it is the
     persisted, append-only LSH index and this join is the per-microbatch
     lookup. Emits one row per (incoming doc, matching band) — the test
     collapses to distinct docs and asserts equality with the batch
     candidate set."""
     from mapreduce_machine_learning_spark.operators.llm import (
-        N_BANDS,
-        ROWS_PER_BAND,
-        SEEDS,
         _bands,
+        minhash_band_keys,
     )
 
     inc = documents_stream(spark, sf_dir).filter(F.col("doc_id") % 10 == 0)
-    toks = F.array_distinct(F.split("text", " "))
-
-    def sig_expr(seed):
-        # single-arg lambda: a 2-arg transform lambda would receive the
-        # element INDEX as its second argument
-        return F.array_min(
-            F.transform(
-                toks, lambda t: F.md5(F.concat(F.lit(seed + "|"), t))
-            )
-        )
-
-    sigs = [sig_expr(s) for s in SEEDS]
-    band_keys = [
-        F.md5(
-            F.concat(*[sigs[b * ROWS_PER_BAND + r] for r in range(ROWS_PER_BAND)])
-        )
-        for b in range(N_BANDS)
-    ]
     probe = inc.select(
         F.col("doc_id").alias("inc_id"),
-        F.posexplode(F.array(*band_keys)).alias("band_id", "band_key"),
+        F.posexplode(minhash_band_keys(F.col("text"))).alias(
+            "band_id", "band_key"
+        ),
     )
     if ex_bands is None:
         ex_bands = (

@@ -596,3 +596,24 @@ def test_broadcast_hints_sit_on_structurally_small_sides(spark):
         .toString()
     )
     assert "strategy=broadcast" not in lg, lg
+
+
+def test_minhash_bands_single_python_map(spark):
+    # the band table is one Arrow map over the document scan: no explode
+    # (Generate), no string MIN aggregate (SortAggregate), and the band
+    # groupBy's exchange is the only one — no repartition ahead of the
+    # kernel
+    from mapreduce_machine_learning_spark import runtime
+
+    runtime.plan_audit_mode(True)
+    try:
+        plan = explain_str(QUERIES["q_llm_minhash"](spark, SF_DIR))
+    finally:
+        runtime.plan_audit_mode(False)
+    nodes = [
+        ln.lstrip(" +-:").split(" (")[0]
+        for ln in plan.split("\n\n")[0].splitlines()[1:]
+    ]
+    assert nodes.count("MapInPandas") == 1, plan
+    assert nodes.count("Exchange") == 1, plan
+    assert "SortAggregate" not in nodes and "Generate" not in nodes, plan

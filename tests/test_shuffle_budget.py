@@ -49,7 +49,9 @@ LIVE_BUDGET_B = {
     "q_win_rank": 65_536,  # 7.6 KB — one window partition's sort keys
     "q_llm_dedup_exact": 131_072,  # 20 KB — md5 keys + survivor rows
     "q_stream_tumble": 262_144,  # 54 KB — per-window partial aggs
-    "q_llm_minhash": 1 << 20,  # 167 KB — 16-way min-agg signatures
+    # 12.9 KB — the band groupBy's partial counts; the band kernel runs on
+    # the scan (the old 16-way min-agg signature shuffle measured 167 KB)
+    "q_llm_minhash": 1 << 20,
     "q_llm_dedup_incremental": 2 << 20,  # 285 KB — delta-bounded pipeline
     # 372 KB measured at sf0.01 (500 docs, same as sf0.001) in the
     # broadcast regime — SHUFFLE_neardup_degenerate_r7.json
@@ -82,7 +84,10 @@ PER_ROW_CEILING = {
     "q_win_rank": ("lineitem_rows", 4.0),  # measured 1.19-1.27 B/row
     "q_stream_tumble": ("events_rows", 80.0),  # 22.9-53.6 B/event
     "q_llm_dedup_exact": ("documents_rows", 128.0),  # 36.8-40 B/doc
-    "q_llm_minhash": ("documents_rows", 1024.0),  # 227-334 B/doc
+    # 227-334 B/doc in SHUFFLE_audit.json, measured with the old min-agg
+    # signature shuffle; 10-26 B/doc with the band kernel, whose only
+    # exchange is the band groupBy
+    "q_llm_minhash": ("documents_rows", 1024.0),
     "q_llm_dedup_incremental": ("documents_rows", 2048.0),  # 570-623 B/doc
 }
 

@@ -4,8 +4,9 @@ Runs the UNMODIFIED production operators on 1x/4x/16x/64x
 realistic-vocabulary corpora (tools/gen_scaling_corpus.py) and records
 wall time:
 
-  * neardup  — q_llm_neardup_pairs cold: tokenize → 16-way md5 MinHash →
-    band self-join → candidate pairs → prefix/length-filtered exact-Jaccard
+  * neardup  — q_llm_neardup_pairs cold: Arrow MinHash band kernel (16
+    md5 seeds per distinct batch token, 4 band keys per doc) → band
+    self-join → candidate pairs → prefix/length-filtered exact-Jaccard
     verify (the full pipeline, timed as one cold action);
   * ivf_build — _ivf_cells cold: broadcast 16-centroid spherical assignment
     over every vector (the index build);
