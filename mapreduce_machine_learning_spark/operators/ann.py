@@ -26,17 +26,25 @@ training-data corpus (clustered embeddings, near-dup cosine ≥ 0.9) the SAME
 plan runs with 12–16 bit bands → 4k–65k buckets/band and 100–1000×
 pruning; the bucket-join shape is what scales, the bit width is the dial.
 
-100 TB shape: signatures are one narrow projection (48 in-row dot products,
-whole-stage codegen, no shuffle); the index is `posexplode` to 12 rows/vec;
-candidate generation is an equi-join on (band_id, band_key) — shuffle keyed
-by bucket, skew bounded by bucket size; rerank touches candidates only.
+100 TB shape: signatures are one BLAS matmul per Arrow batch (`sig_batches`,
+no shuffle). The pair queries index them as `posexplode` to 12 rows/vec and
+generate candidates by an equi-join on (band_id, band_key) — shuffle keyed
+by bucket, skew bounded by bucket size. The single-vector probe
+(q_llm_ann_knn) signs its query once on the driver, then reads the band
+index if the session has built it, or else filters the corpus in the
+signing pass itself: one scan, no join, no shuffle. Either way it reads the
+whole corpus; a band index partitioned by (band_id, band_key) at rest would
+turn that read into static partition pruning
+(tests/test_ann.py::test_lsh_band_partitioned_layout_prunes), but no query
+reads that layout yet. Rerank touches candidates only.
 """
 
 from __future__ import annotations
 
 import hashlib
+from typing import Callable, NamedTuple
 
-from pyspark.sql import Window
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from mapreduce_machine_learning_spark.determinism import r6
@@ -44,7 +52,7 @@ from mapreduce_machine_learning_spark.functions import cosine
 from mapreduce_machine_learning_spark.io import load_table as T
 from mapreduce_machine_learning_spark.operators.llm import _materialize
 from mapreduce_machine_learning_spark.registry import query
-from mapreduce_machine_learning_spark.runtime import checkpoint as _ckpt
+from mapreduce_machine_learning_spark.runtime import is_audit_mode, is_built
 
 _RP_DIM = 64
 _RP_BITS = 4  # sign bits per band → 16 buckets/band (see parameter note)
@@ -95,11 +103,10 @@ def _make_sig_kernel(signs, bits, bands):
     return kernel
 
 
-# the engine's index kernel (12 bands × 4 bits). Module-scope because BOTH
-# the static index build (_bands) and the streaming probe
-# (streaming/live.ann_probe_stream) must run the IDENTICAL kernel — a drift
-# between them would silently desynchronize the probe from the index it
-# joins.
+# the engine's index kernel (12 bands × 4 bits). Module-scope because the
+# static index build (_bands), the kNN probe (_lsh_probe) and the streaming
+# probe (streaming/live.ann_probe_stream) must run the IDENTICAL kernel — a
+# drift between them would silently desynchronize a probe from the index.
 sig_batches = _make_sig_kernel(_RP_SIGNS, _RP_BITS, _RP_BANDS)
 
 
@@ -129,10 +136,15 @@ def band_index(df, bits=_RP_BITS, bands=_RP_BANDS, dim=_RP_DIM):
     )
 
 
+_BANDS_MEMO = "ann_bands"  # session memo keys of the two indexes
+_CELLS_MEMO = "ivf_cells"
+
+
 def _bands(spark, sf_dir):
     """(vec_id, band_id, band_key) index — materialized once per session;
-    the knn and pair queries both read it (same write-once pipeline pattern
-    as the MinHash band table in llm.py).
+    the bucket, pair and semantic-dedup queries and the streaming probe
+    read it (same write-once pipeline pattern as the MinHash band table in
+    llm.py).
 
     Signatures are computed as ONE float64 BLAS matmul per Arrow batch
     (M·Hᵀ for all 48 hyperplanes at once, `mapInPandas`) — measured 9×
@@ -148,7 +160,7 @@ def _bands(spark, sf_dir):
         emb = T(spark, sf_dir, "embeddings").select("vec_id", "embedding")
         return band_index(emb)  # default width → the shared sig_batches kernel
 
-    return _materialize(spark, sf_dir, "ann_bands", build)
+    return _materialize(spark, sf_dir, _BANDS_MEMO, build)
 
 
 def _sql_signs(j: int) -> str:
@@ -224,29 +236,151 @@ def q_llm_ann_buckets(spark, sf_dir):
     """,
 )
 def q_llm_ann_knn(spark, sf_dir):
-    """ANN top-10 for the q_ml_knn query vector (vec_id=0): probe the 12
-    band buckets the query falls in, take every co-bucketed vector as a
-    candidate, rerank candidates by exact double-precision cosine. The
-    probe is a broadcast semi-join of the 12-row query signature against
-    the index — at 100 TB the scan side prunes to the probed buckets
-    (partition the index by band_key at rest and this is static partition
-    pruning). Recall vs the exact q_ml_knn is asserted in pytest."""
-    bands = _bands(spark, sf_dir)
-    qb = bands.filter(F.col("vec_id") == 0).select("band_id", "band_key")
-    cand = (
-        bands.filter(F.col("vec_id") != 0)
-        .join(F.broadcast(qb), ["band_id", "band_key"], "left_semi")
-        .select("vec_id")
-        .distinct()
+    """ANN top-10 for the q_ml_knn query vector (vec_id=0): every vector
+    that shares one of the query's 12 (band_id, band_key) buckets is a
+    candidate, and candidates are reranked by exact double-precision
+    cosine. Recall vs the exact q_ml_knn is asserted in pytest.
+
+    The query is signed once on the driver (`_lsh_probe`). If this session
+    has already built the band index, the candidates are its rows in the
+    query's 12 buckets; otherwise one `sig_batches` pass over the corpus
+    keeps them, which builds no index and needs no join or shuffle. Both
+    give the same candidate set
+    (tests/test_ann.py::test_knn_candidates_match_index) — see
+    `_knn_top10` for the measured trade. Neither path prunes the corpus
+    read: the at-rest layout that would (band index partitioned by bucket,
+    tests/test_ann.py::test_lsh_band_partitioned_layout_prunes) is not
+    what this query reads.
+    """
+    return _knn_top10(spark, sf_dir, _lsh_probe(spark, sf_dir))
+
+
+class _Probe(NamedTuple):
+    """A kNN probe derived once from the query. ``kernel`` keeps the
+    candidates, vec 0 excluded, from a corpus scan; ``hit`` selects the
+    same candidates from the session index memo ``index`` (memo key
+    ``key``); ``q`` is the query vector, None when there is no vec 0 (then
+    nothing is kept)."""
+
+    kernel: Callable
+    index: Callable
+    key: str
+    hit: Column
+    q: list | None
+
+
+def _placeholder_vector(j=0):
+    """Unit vector e_j: stands in for fetched probe metadata under
+    `runtime.plan_audit_mode`, which must build plans without running a
+    job. Nonzero, so an audit that executes the plan divides by no zero
+    norm."""
+    return [1.0 if i == j else 0.0 for i in range(_RP_DIM)]
+
+
+def _probe_batch(vec):
+    """``vec`` as a one-row (vec_id, embedding) batch, so the driver runs
+    the same Arrow kernel on the query that the executors run on the
+    corpus."""
+    import numpy as np
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            "vec_id": pd.Series([0], dtype="int64"),
+            "embedding": pd.Series([np.array(vec, dtype="float64")]),
+        }
     )
-    emb = T(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_embedding")
+
+
+def _make_lsh_probe_kernel(qkeys):
+    """Arrow-batch LSH probe: sign each batch with `sig_batches` and keep
+    the (vec_id, embedding) rows, vec 0 excluded, whose key equals the
+    query's in at least one band. Empty ``qkeys`` keeps nothing."""
+
+    def kernel(it):
+        import numpy as np
+
+        for pdf in it:
+            if not len(pdf):
+                continue
+            sig = next(sig_batches(iter([pdf])))
+            hit = np.zeros(len(pdf), dtype=bool)
+            for b, key in enumerate(qkeys):
+                hit |= sig[f"k{b}"].to_numpy() == key
+            hit &= pdf["vec_id"].to_numpy() != 0
+            if hit.any():
+                yield pdf[hit]
+
+    return kernel
+
+
+def _lsh_probe(spark, sf_dir):
+    """The LSH kNN probe. One driver fetch of vec 0; its band keys come
+    from the `sig_batches` kernel the index and the streaming probe run,
+    so the probe cannot drift from the index."""
+    if is_audit_mode():
+        q = _placeholder_vector()
+    else:
+        rows = (
+            T(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id") == 0)
+            .select(F.col("embedding").cast("array<double>").alias("e"))
+            .collect()
+        )
+        q = [float(x) for x in rows[0].e] if rows else None
+    qkeys = []
+    if q is not None:
+        sig = next(sig_batches(iter([_probe_batch(q)])))
+        qkeys = [int(sig[f"k{b}"].iloc[0]) for b in range(_RP_BANDS)]
+    # band b's row is a hit iff its key is the query's key in band b
+    hit = (
+        F.col("band_key")
+        == F.element_at(F.array(*map(F.lit, qkeys)), F.col("band_id") + 1)
+        if qkeys
+        else F.lit(False)
     )
+    return _Probe(_make_lsh_probe_kernel(qkeys), _bands, _BANDS_MEMO, hit, q)
+
+
+def _probe_scan(spark, sf_dir, kernel):
+    """(vec_id, embedding) rows of `embeddings` that a probe kernel keeps:
+    one scan, one mapInPandas, no join and no shuffle."""
+    emb = T(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return emb.mapInPandas(kernel, schema=emb.schema)
+
+
+def _knn_top10(spark, sf_dir, probe):
+    """Top-10 of a probe's candidates by round-6 cosine to the query, ties
+    by vec_id.
+
+    The candidates come from the probe's index when this session has
+    already built it (`runtime.is_built`): a filter of the cached rows
+    semi-joined back to the corpus, with no Python pass. Otherwise one
+    kernel pass over the scan keeps them and no index is built. Measured
+    on 4 cores over 2k-512k vectors (SCALING.md): the one pass is 1.2-1.7x
+    (LSH) and 2.6-27x (IVF) faster than building the index first, and
+    reading an index already built is as fast as the one pass or faster
+    (up to 2.4x).
+
+    The rerank is the JVM `cosine` fold with the query as a literal double
+    array, so the reported cos_sim values do not depend on the path."""
+    if is_built(spark, sf_dir, probe.key):
+        ids = probe.index(spark, sf_dir).filter(
+            probe.hit & (F.col("vec_id") != 0)
+        )
+        cand = (
+            T(spark, sf_dir, "embeddings")
+            .select("vec_id", "embedding")
+            .join(ids.select("vec_id"), "vec_id", "left_semi")
+        )
+    else:
+        cand = _probe_scan(spark, sf_dir, probe.kernel)
+    if probe.q is None:  # no vec 0, so neither path keeps a row
+        qv = F.lit(None).cast("array<double>")
+    else:
+        qv = F.array(*[F.lit(x) for x in probe.q])
     return (
-        cand.join(emb, "vec_id")
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", r6(cosine("embedding", "q_embedding")).alias("cos_sim"))
+        cand.select("vec_id", r6(cosine("embedding", qv)).alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), "vec_id")
         .limit(10)
     )
@@ -337,10 +471,13 @@ def q_llm_ann_pairs(spark, sf_dir):
 # distribution (centroids are sampled corpus vectors — fixed literal ids,
 # k-means-init style), so on this corpus it measures 1.0 recall@10 scanning
 # ~27% of vectors where 12-band LSH needs ~40% for 0.6 — data-adaptive
-# partitions beat oblivious ones. At 100 TB the cell id becomes the at-rest
-# partition key (partitioned parquet / liquid clustering): a probe then
-# reads nprobe/k of the corpus via static partition pruning, and the
-# assignment pass is one broadcast join (k vectors) + map-side argmax.
+# partitions beat oblivious ones. At 100 TB the cell id is meant to become
+# the at-rest partition key (partitioned parquet / liquid clustering): a
+# probe would then read nprobe/k of the corpus via static partition pruning
+# (test_ivf_cell_partitioned_layout_prunes; q_llm_ann_ivf_knn does not read
+# that layout yet), and the
+# assignment pass is a map over the scan against the k centroid rows
+# (`assign_cells_bulk`, or `assign_cells`' broadcast + map-side argmax).
 # ---------------------------------------------------------------------------
 
 _IVF_K = 16
@@ -378,17 +515,19 @@ CELL_PROBE_SCHEMA = "vec_id long, cid long"
 def make_cell_probe_kernel(centroids, nprobe=_IVF_NPROBE, strict=False):
     """Arrow-batch IVF cell-probe kernel: each incoming vector is assigned
     its top-``nprobe`` cells by ROUND-6 cosine to the given centroids (tie
-    → lowest cid) — the same RANKING RULE as the batch probe in
-    q_llm_ann_ivf_knn and `assign_cells`' argmax, but NOT the same
-    floating-point expression: the kernel scores with a normalized BLAS
+    → lowest cid) — the same RANKING RULE as `assign_cells`' argmax (which
+    builds `_ivf_cells`), but NOT the same floating-point expression: the
+    kernel scores with a normalized BLAS
     matmul while the JVM side folds dot/(nrm·cnrm) sequentially, so the
     raw cosines can differ by ~1 ulp and agreement holds THROUGH the
     round-6 grid. A stream/batch rank flip needs a query whose r6 cosines
     to the rank-nprobe and rank-nprobe+1 centroids straddle a 1e-6
     boundary within that ulp — P ≈ k·ulp/grid ≈ 16·2e-16/1e-6 ≈ 3e-9 per
     query (same accepted class as the BLAS-vs-oracle boundary in
-    _blocked_cosine_pairs; the cross-check lives in
-    tests/test_streaming_live.py::test_ivf_probe_stream_equals_batch).
+    _blocked_cosine_pairs; the cross-checks live in
+    tests/test_streaming_live.py::test_ivf_probe_stream_equals_batch and
+    tests/test_ann.py::test_knn_candidates_match_index — q_llm_ann_ivf_knn
+    ranks its query's cells AND assigns the corpus with this kernel).
     ``centroids`` is the (cid, vector) INDEX METADATA (k rows, closed over
     — no corpus access); the scoring is one BLAS matmul per batch and the
     ranking is one vectorized lexsort over the (n, k) score matrix.
@@ -411,15 +550,18 @@ def make_cell_probe_kernel(centroids, nprobe=_IVF_NPROBE, strict=False):
     sampled-row centroids `ivf_centroid_rows` produces. ``strict=True``
     (ADVICE r6) makes zero-norm INPUT vectors raise too, aligning the
     Arrow path with the JVM fail-fast build contract — `assign_cells_bulk`
-    passes it by default so only the stream probe keeps the lenient
-    degrade. All pinned by
-    tests/test_ann.py::test_assign_paths_agree_on_zero_norm_vector."""
+    passes it by default, and so do both halves of the q_llm_ann_ivf_knn
+    probe, so only the stream probe keeps the lenient degrade. All pinned
+    by tests/test_ann.py::test_assign_paths_agree_on_zero_norm_vector."""
 
     def kernel(it):
         import numpy as np
         import pandas as pd
 
-        from mapreduce_machine_learning_spark.determinism import np_r6
+        def np_r6(x):
+            # determinism.np_r6, restated so the pickled kernel never
+            # imports the package on a worker (test_probe_kernels_self_contained)
+            return np.copysign(np.floor(np.abs(x) * 1e6 + 0.5) / 1e6, x)
 
         cid_arr = np.array([int(c) for c, _ in centroids], dtype="int64")
         C = np.array([v for _, v in centroids], dtype="float64")
@@ -474,9 +616,9 @@ def ivf_centroid_rows(spark, sf_dir):
 
 def centroid_frame(emb):
     """(cid, ce, cnrm) centroid metadata from an (vec_id, e[, nrm]) frame —
-    the k fixed-id rows every IVF consumer (index build, delta append,
-    batch probe, test expectations) broadcasts. One definition so a change
-    to the id set or the cast discipline lands everywhere at once."""
+    the k fixed-id rows the JVM IVF consumers (index build, delta append,
+    test expectations) broadcast. One definition so a change to the id
+    set or the cast discipline lands everywhere at once."""
     from mapreduce_machine_learning_spark.functions import l2norm
 
     if "nrm" not in emb.columns:
@@ -585,7 +727,7 @@ def _ivf_cells(spark, sf_dir):
         ).withColumn("nrm", l2norm("e"))
         return assign_cells(emb, centroid_frame(emb))
 
-    return _materialize(spark, sf_dir, "ivf_cells", build)
+    return _materialize(spark, sf_dir, _CELLS_MEMO, build)
 
 
 @query(
@@ -639,46 +781,64 @@ def q_llm_ann_ivf_knn(spark, sf_dir):
     """IVF ANN top-10 for the q_ml_knn query vector: probe the 4 cells
     whose centroids are nearest the query, rerank members by exact cosine.
     Measured 10/10 recall vs the exact baseline at sf0.01 while scanning
-    ~27% of the corpus (asserted in pytest). Probe = broadcast of 4 cell
-    ids against the cell assignment — with the corpus partitioned by cid
-    at rest this is partition pruning, the true 100 TB read path."""
-    cells = _ivf_cells(spark, sf_dir)
-    emb = T(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    # shared centroid-metadata builder; cnrm is column-pruned away since
-    # the probe scores with cosine() directly (k=16 rows — hoisting norms
-    # buys nothing at metadata scale)
-    cent = centroid_frame(emb).select("cid", "ce")
-    # 1-row query vector, consumed by the centroid probe AND the final
-    # rerank — checkpointed so each consumer doesn't re-scan for it
-    q = _ckpt(
-        emb.filter(F.col("vec_id") == 0).select(F.col("e").alias("qe"))
-    )
-    # rank the probe on the ROUND-6 cosine (cid tie-break): if the 4th and
-    # 5th nearest centroids differ by less than cross-engine summation
-    # noise, an unrounded rank would flip the probed cell set — and with it
-    # the whole top-10 (ADVICE round 2). The oracle's scored.rn rounds the
-    # same way.
-    w = Window.orderBy(F.desc("qcs"), "cid")
-    qprobe = (
-        cent.crossJoin(F.broadcast(q))
-        .select("cid", r6(cosine("ce", "qe")).alias("qcs"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _IVF_NPROBE)
-        .select("cid")
-    )
-    cand = (
-        cells.filter(F.col("vec_id") != 0)
-        .join(F.broadcast(qprobe), "cid", "left_semi")
-        .select("vec_id")
-    )
-    return (
-        cand.join(emb, "vec_id")
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", r6(cosine("e", "qe")).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), "vec_id")
-        .limit(10)
+    ~27% of the corpus (asserted in pytest).
+
+    The 16 centroid rows are fetched once and ranked against the query on
+    the driver (`_ivf_probe`). If this session has already built the cell
+    index, the candidates are its rows in the 4 probed cells; otherwise
+    the assignment kernel keeps them in one pass over the corpus, which
+    builds no index and needs no join or shuffle. Both give the same
+    candidate set (tests/test_ann.py::test_knn_candidates_match_index) —
+    see `_knn_top10` for the measured trade. Neither path prunes the
+    corpus read: the at-rest layout that would (corpus partitioned by
+    cell, tests/test_ann.py::test_ivf_cell_partitioned_layout_prunes) is
+    not what this query reads."""
+    return _knn_top10(spark, sf_dir, _ivf_probe(spark, sf_dir))
+
+
+def _make_ivf_probe_kernel(centroids, probed):
+    """Arrow-batch IVF probe: assign each batch with the strict nprobe=1
+    cell kernel (the `assign_cells_bulk` rule) and keep the (vec_id,
+    embedding) rows, vec 0 excluded, that fall in a ``probed`` cell.
+    Empty ``probed`` keeps nothing."""
+    assign = make_cell_probe_kernel(centroids, nprobe=1, strict=True)
+
+    def kernel(it):
+        import numpy as np
+
+        cells = np.array(probed, dtype="int64")
+        for pdf in it:
+            if not len(pdf) or not len(cells):
+                continue
+            cid = next(assign(iter([pdf])))["cid"].to_numpy()
+            hit = np.isin(cid, cells) & (pdf["vec_id"].to_numpy() != 0)
+            if hit.any():
+                yield pdf[hit]
+
+    return kernel
+
+
+def _ivf_probe(spark, sf_dir):
+    """The IVF kNN probe. One driver fetch of the 16 centroid rows; vec 0
+    is centroid 0, so they carry the query too. The query's cells are
+    ranked by the streaming probe's kernel rule (round-6 cosine, tie →
+    lowest cid), strict like every non-stream caller: a zero-norm query
+    fails here, as the JVM cosine would."""
+    if is_audit_mode():
+        rows = [
+            (c, _placeholder_vector(j))
+            for j, c in enumerate(_IVF_CENTROID_IDS)
+        ]
+    else:
+        rows = ivf_centroid_rows(spark, sf_dir)
+    q = dict(rows).get(0)
+    probed = []
+    if q is not None:
+        rank = make_cell_probe_kernel(rows, nprobe=_IVF_NPROBE, strict=True)
+        probed = next(rank(iter([_probe_batch(q)])))["cid"].tolist()
+    hit = F.col("cid").isin(probed) if probed else F.lit(False)
+    return _Probe(
+        _make_ivf_probe_kernel(rows, probed), _ivf_cells, _CELLS_MEMO, hit, q
     )
 
 

@@ -62,6 +62,27 @@ def materialize(spark: SparkSession, sf_dir: str, key: str, build) -> DataFrame:
     return _MATERIALIZED[k]
 
 
+def is_built(spark: SparkSession, sf_dir: str, key: str) -> bool:
+    """True if the memo holds ``key`` AND its cache is filled in every
+    partition. An entry alone only says some plan was built over it
+    (persist is lazy), so a consumer choosing between reading the memo and
+    re-deriving its rows asks this instead. Always False under
+    plan_audit_mode, which memoizes nothing."""
+    df = _MATERIALIZED.get((spark.sparkContext.applicationId, sf_dir, key))
+    if df is None:
+        return False
+    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(
+        df._jdf
+    )
+    return bool(
+        cached.isDefined()
+        and cached.get()
+        .cachedRepresentation()
+        .cacheBuilder()
+        .isCachedColumnBuffersLoaded()
+    )
+
+
 def checkpoint(df: DataFrame) -> DataFrame:
     """Mark a within-query shared frame for single computation. Lazy: the
     cache fills on the query's own action; every consumer in the plan

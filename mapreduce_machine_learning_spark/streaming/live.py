@@ -286,7 +286,8 @@ def ivf_probe_stream(
     """Streaming IVF retrieval probe: a stream of query vectors (the
     vec_id % 50 = 0 slice) is assigned its top-nprobe cells IN-STREAM —
     an Arrow mapInPandas kernel closed over the 16-row centroid metadata,
-    row-local and stateless, the exact ranking rule of the batch probe —
+    row-local and stateless, the kernel q_llm_ann_ivf_knn ranks its own
+    query with —
     and a stream-static join against the cell index emits (query,
     candidate) pairs, final rerank left to the consumer. The IVF twin of
     ann_probe_stream, and the live half of the persisted-index story:

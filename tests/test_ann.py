@@ -1,11 +1,12 @@
 """ANN (random-hyperplane LSH) invariants: recall vs the exact brute-force
 baseline, index structure, and plan shape (no all-pairs comparison)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_machine_learning_spark.operators import ann
 from mapreduce_machine_learning_spark.registry import all_queries
-from tests.conftest import SF_DIR_T2
+from tests.conftest import SF_DIR, SF_DIR_T2
 
 
 def _q(name):
@@ -89,15 +90,175 @@ def test_bucket_sizes_bound_rerank(spark):
 
 
 def test_knn_plan_probes_not_allpairs(spark):
-    """The ANN knn plan must contain no nested-loop/cartesian join of the
-    embedding table against itself — candidates come from the band-key
-    equi-join (semi-join probe), then a broadcast of the 1-row query."""
-    df = _q("q_llm_ann_knn")(spark, SF_DIR_T2)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    # the only nested-loop allowed is the 1-row query-vector broadcast
-    assert plan.count("BroadcastNestedLoopJoin") <= 1
-    assert "LeftSemi" in plan
+    """Neither ANN knn plan may compare the embedding table against itself:
+    with no index built in the session, candidates come from ONE probe
+    pass over the scan (exactly one MapInPandas), and the rerank takes the
+    query as a literal — so no join, no cartesian product and no exchange
+    at all."""
+    from mapreduce_machine_learning_spark import runtime
+
+    runtime.release_all()  # no built index: the one-pass plan
+    for name in ("q_llm_ann_knn", "q_llm_ann_ivf_knn"):
+        df = _q(name)(spark, SF_DIR_T2)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInPandas") == 1, (name, plan)
+        assert "Exchange" not in plan, (name, plan)
+        assert "Join" not in plan, (name, plan)
+        assert "CartesianProduct" not in plan, (name, plan)
+
+
+def _outside_cache(plan):
+    """A plan tree string without the subtrees under InMemoryTableScan
+    nodes: what the query runs, not the lineage its cached input was built
+    from."""
+    keep, cut = [], None
+    for line in plan.splitlines():
+        col = len(line) - len(line.lstrip(" :+-"))
+        if cut is not None and col > cut:
+            continue
+        cut = col if "InMemoryTableScan" in line else None
+        keep.append(line)
+    return "\n".join(keep)
+
+
+def test_knn_reads_built_index(spark):
+    """Once the session has built a probe's index, the knn query reads it
+    instead of re-deriving the candidates in a Python pass: no
+    MapInPandas, no all-pairs join — and the same rows as the one-pass
+    plan."""
+    from mapreduce_machine_learning_spark import runtime
+
+    for name, index, key in (
+        ("q_llm_ann_knn", ann._bands, ann._BANDS_MEMO),
+        ("q_llm_ann_ivf_knn", ann._ivf_cells, ann._CELLS_MEMO),
+    ):
+        runtime.release_all()
+        assert not runtime.is_built(spark, SF_DIR_T2, key)
+        scan_rows = _q(name)(spark, SF_DIR_T2).collect()
+        index(spark, SF_DIR_T2)  # a planned but unfilled memo is not built
+        assert not runtime.is_built(spark, SF_DIR_T2, key)
+        index(spark, SF_DIR_T2).count()
+        assert runtime.is_built(spark, SF_DIR_T2, key)
+        df = _q(name)(spark, SF_DIR_T2)
+        plan = _outside_cache(df._jdf.queryExecution().executedPlan().toString())
+        assert "MapInPandas" not in plan, (name, plan)
+        assert "InMemoryTableScan" in plan, (name, plan)
+        assert "CartesianProduct" not in plan, (name, plan)
+        assert "NestedLoopJoin" not in plan, (name, plan)
+        assert df.collect() == scan_rows and len(scan_rows) == 10, name
+
+
+@pytest.mark.parametrize("sf_dir", [SF_DIR, SF_DIR_T2])
+def test_knn_candidates_match_index(spark, sf_dir):
+    """The probe kernels, and the probes' filters over a built index, must
+    keep exactly the candidate sets the batch indexes define — the top-10 alone could hide a probe drift. LSH: the
+    vectors sharing a (band_id, band_key) with vec 0 in `_bands`. IVF:
+    the members of the 4 cells `_ivf_cells`' JVM ranking puts nearest
+    vec 0 (round-6 cosine, tie → lowest cid). vec 0 itself is excluded."""
+    from pyspark.sql import Window
+
+    from mapreduce_machine_learning_spark.determinism import r6
+    from mapreduce_machine_learning_spark.functions import cosine
+
+    def kept(probe):
+        """(one-pass kernel's set, built index's set) of a probe."""
+        rows = ann._probe_scan(spark, sf_dir, probe.kernel).collect()
+        index = probe.index(spark, sf_dir).filter(
+            probe.hit & (F.col("vec_id") != 0)
+        )
+        return (
+            {r.vec_id for r in rows},
+            {r.vec_id for r in index.select("vec_id").collect()},
+        )
+
+    bands = ann._bands(spark, sf_dir)
+    qb = bands.filter(F.col("vec_id") == 0).select("band_id", "band_key")
+    lsh_want = {
+        r.vec_id
+        for r in bands.filter(F.col("vec_id") != 0)
+        .join(qb, ["band_id", "band_key"], "left_semi")
+        .select("vec_id")
+        .collect()
+    }
+    assert kept(ann._lsh_probe(spark, sf_dir)) == (lsh_want, lsh_want)
+    assert lsh_want
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("e")
+    )
+    q = emb.filter(F.col("vec_id") == 0).select(F.col("e").alias("qe"))
+    probed = [
+        r.cid
+        for r in ann.centroid_frame(emb)
+        .crossJoin(q)
+        .select("cid", r6(cosine("ce", "qe")).alias("qcs"))
+        .withColumn(
+            "rn", F.row_number().over(Window.orderBy(F.desc("qcs"), "cid"))
+        )
+        .filter(F.col("rn") <= ann._IVF_NPROBE)
+        .collect()
+    ]
+    ivf_want = {
+        r.vec_id
+        for r in ann._ivf_cells(spark, sf_dir)
+        .filter(F.col("cid").isin(probed) & (F.col("vec_id") != 0))
+        .collect()
+    }
+    assert kept(ann._ivf_probe(spark, sf_dir)) == (ivf_want, ivf_want)
+    assert ivf_want
+
+
+def test_probe_kernels_self_contained(tmp_path):
+    """The kNN probe kernels ship BY VALUE: unpickled in a fresh
+    interpreter that cannot import this package (as a local-mode worker
+    started outside the checkout cannot), they must run and keep the same
+    rows as in-process."""
+    import ast
+    import subprocess
+    import sys
+
+    import numpy as np
+    import pandas as pd
+    from pyspark import cloudpickle
+
+    rng = np.random.default_rng(7)
+    vecs = rng.normal(size=(200, ann._RP_DIM))
+    batch = pd.DataFrame(
+        {
+            "vec_id": pd.Series(np.arange(200), dtype="int64"),
+            "embedding": pd.Series(list(vecs), dtype=object),
+        }
+    )
+    sig = next(ann.sig_batches(iter([batch.head(1)])))
+    qkeys = [int(sig[f"k{b}"].iloc[0]) for b in range(ann._RP_BANDS)]
+    rows = [(c, [float(x) for x in vecs[c]]) for c in range(ann._IVF_K)]
+    kernels = [
+        ann._make_lsh_probe_kernel(qkeys),
+        ann._make_ivf_probe_kernel(rows, [0, 3, 5, 9]),
+    ]
+    want = [
+        sorted(int(v) for pdf in k(iter([batch])) for v in pdf.vec_id)
+        for k in kernels
+    ]
+    assert all(want)
+
+    blob = tmp_path / "kernels.pkl"
+    blob.write_bytes(cloudpickle.dumps((kernels, batch)))
+    code = (
+        "import pickle, sys\n"
+        "sys.modules['mapreduce_machine_learning_spark'] = None\n"
+        f"kernels, batch = pickle.load(open({str(blob)!r}, 'rb'))\n"
+        "print([sorted(int(v) for pdf in k(iter([batch])) for v in pdf.vec_id)"
+        " for k in kernels])\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    assert ast.literal_eval(out) == want
 
 
 def test_ivf_recall_and_pruning(spark):

@@ -530,7 +530,14 @@ def test_audit_mode_plan_build_runs_no_jobs(spark):
 
     runtime.plan_audit_mode(True)
     try:
-        for name in ("q_llm_neardup_pairs", "q_llm_dedup_incremental"):
+        for name in (
+            "q_llm_neardup_pairs",
+            "q_llm_dedup_incremental",
+            # the kNN probes fetch their metadata at plan build; audit
+            # mode must swap in placeholders instead
+            "q_llm_ann_knn",
+            "q_llm_ann_ivf_knn",
+        ):
             before = n_execs()
             df = all_queries()[name](spark, SF_DIR)  # the probe ran HERE
             _ = df._jdf.queryExecution().executedPlan()  # force planning

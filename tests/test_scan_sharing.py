@@ -68,8 +68,6 @@ ALLOWED_MULTI = {
     "q_events_wau": {"events": 2},
     "q_join_corr_subquery": {"customer": 2},
     "q_join_range": {"events": 2},
-    "q_llm_ann_ivf_knn": {"embeddings": 2},
-    "q_llm_ann_knn": {"embeddings": 2},
     "q_llm_ann_pairs": {"embeddings": 2},
     "q_llm_contamination": {"documents": 3},
     "q_llm_data_card": {"documents": 2},

@@ -22,8 +22,8 @@ measurement with ~4–8× headroom for partition-framing noise, far below
 the 2× volume regression the gate exists to catch on these small inputs
 only because the measured values themselves are orders of magnitude
 under the ceiling of the NEXT growth class (e.g. q_agg_group moves 611 B
-where shuffling the group input would move ~100 KB; q_llm_ann_knn moves
-2.5 KB where shuffling the embedding corpus would move ~2 MB). A plan
+where shuffling the group input would move ~100 KB; q_llm_ann_knn moved
+2.5 KB in round 7 where shuffling the embedding corpus would move ~2 MB). A plan
 that falls off its class blows the budget by 10×+, not by the headroom
 margin.
 """
@@ -44,8 +44,10 @@ LIVE_BUDGET_B = {
     "q_agg_global": 4_096,  # measured 96 B — statistics, not rows
     "q_agg_group": 16_384,  # 611 B — one row per (partition, group)
     "q_join_multi": 16_384,  # 1.3 KB — dims broadcast, post-agg rows move
-    "q_llm_ann_knn": 32_768,  # 2.6 KB — per-partition top-k rows only
-    "q_llm_ann_ivf_knn": 65_536,  # 13.7 KB — cell-pruned probe rows
+    # 0 B — one probe pass over the scan and a top-k, no exchange (the
+    # budgets date from the index-join plans: 2.6 KB and 13.7 KB)
+    "q_llm_ann_knn": 32_768,
+    "q_llm_ann_ivf_knn": 65_536,
     "q_win_rank": 65_536,  # 7.6 KB — one window partition's sort keys
     "q_llm_dedup_exact": 131_072,  # 20 KB — md5 keys + survivor rows
     "q_stream_tumble": 262_144,  # 54 KB — per-window partial aggs
@@ -84,9 +86,8 @@ PER_ROW_CEILING = {
     "q_win_rank": ("lineitem_rows", 4.0),  # measured 1.19-1.27 B/row
     "q_stream_tumble": ("events_rows", 80.0),  # 22.9-53.6 B/event
     "q_llm_dedup_exact": ("documents_rows", 128.0),  # 36.8-40 B/doc
-    # 227-334 B/doc in SHUFFLE_audit.json, measured with the old min-agg
-    # signature shuffle; 10-26 B/doc with the band kernel, whose only
-    # exchange is the band groupBy
+    # 10-26 B/doc: the band kernel's only exchange is the band groupBy
+    # (the ceiling dates from the min-agg signature shuffle, 227-334 B/doc)
     "q_llm_minhash": ("documents_rows", 1024.0),
     "q_llm_dedup_incremental": ("documents_rows", 2048.0),  # 570-623 B/doc
 }

@@ -22,6 +22,11 @@ task))`` followed by the values line; for PEAK semantics the MAX entry
 carries the number (summing per-task peaks would fabricate a bigger
 task), while SPILL is genuinely additive so its TOTAL carries.
 
+Runs under `runtime.plan_audit_mode`, like tools/shuffle_audit.py: no
+session memo, and the two kNN queries probe with unit-vector placeholder
+metadata, so their rows hold the real one-pass plan over the real corpus
+with a different candidate set than the real query keeps.
+
 Usage: python tools/memory_audit.py [--out MEMORY_audit.json]
          [--dirs D1,D2,...] [--queries q1,q2,...] [--conf k=v]...
 """

@@ -22,7 +22,11 @@ What the numbers should show (and SCALING.md records):
 
 One shared session (metrics are per-execution, so cross-query state
 cannot mix them); `runtime.plan_audit_mode` disables the session memo so
-each execution's plan carries its full pipeline.
+each execution's plan carries its full pipeline. The same mode makes the
+two kNN queries (q_llm_ann_knn, q_llm_ann_ivf_knn) skip their plan-build
+metadata fetch and probe with unit-vector placeholders for the query and
+the centroids: their rows measure the real one-pass plan over the real
+corpus, but with a different candidate set than the real query keeps.
 
 Usage: python tools/shuffle_audit.py [--out SHUFFLE_audit.json]
          [--dirs D1,D2,...] [--queries q1,q2,...]
