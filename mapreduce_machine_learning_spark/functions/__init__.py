@@ -5,6 +5,14 @@ All pure JVM higher-order functions (``zip_with``/``transform``/
 ``aggregate``) — no Python in the data path; elements are cast to double
 before arithmetic so results are precision-stable across engines and across
 Spark's float codegen paths.
+
+The vector helpers take SQL expression text (a column name is one; so is
+``determinism.sql_array``'s literal) and build their Column with a single
+``F.expr`` parse: one py4j call, where the same tree built from PySpark
+lambdas cost ~330 per cosine. ``cosine_sql`` returns the text itself, for
+callers that compose it into a larger expression (a SQL lambda body).
+The fold seed is ``0.0D``: a bare ``0.0`` parses as a decimal and would
+change the accumulator type.
 """
 
 from __future__ import annotations
@@ -13,31 +21,45 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
+def _fold_sql(arr: str) -> str:
+    return f"aggregate({arr}, 0.0D, (acc, z) -> acc + z)"
+
+
+def _dot_sql(a: str, b: str) -> str:
     """Σ aᵢ·bᵢ in double precision."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, z: acc + z,
+    return _fold_sql(
+        f"zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE))"
     )
 
 
-def sqnorm(a: Column | str) -> Column:
+def _sqnorm_sql(a: str) -> str:
     """Σ aᵢ² in double precision."""
-    return F.aggregate(
-        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, z: acc + z,
-    )
+    return _fold_sql(f"transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")
 
 
-def l2norm(a: Column | str) -> Column:
-    return F.sqrt(sqnorm(a))
+def _l2norm_sql(a: str) -> str:
+    return f"SQRT({_sqnorm_sql(a)})"
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
+def cosine_sql(a: str, b: str) -> str:
     """Cosine similarity; the caller is responsible for zero-vector guards."""
-    return dot(a, b) / (l2norm(a) * l2norm(b))
+    return f"({_dot_sql(a, b)} / ({_l2norm_sql(a)} * {_l2norm_sql(b)}))"
+
+
+def dot(a: str, b: str) -> Column:
+    return F.expr(_dot_sql(a, b))
+
+
+def sqnorm(a: str) -> Column:
+    return F.expr(_sqnorm_sql(a))
+
+
+def l2norm(a: str) -> Column:
+    return F.expr(_l2norm_sql(a))
+
+
+def cosine(a: str, b: str) -> Column:
+    return F.expr(cosine_sql(a, b))
 
 
 def tokens(text_col: Column | str = "text") -> Column:

@@ -14,12 +14,13 @@ per-row term (σ(wᵀx), a GMM responsibility, a k-means assignment), one global
 aggregate sums the sufficient statistics over it, and the driver collects the
 single row; the row count rides in the first iteration's aggregate. Both
 nodes are built from SQL text (one ``selectExpr`` each) with the parameters as
-exact double literals (``_lit``), which Catalyst constant-folds into codegen —
-a few py4j calls per iteration instead of dozens of Column calls. The dense
-solve runs in numpy on the driver (Chu et al. NIPS'06 summation form). At
-100 TB the per-iteration cost is one scan of cached columnar batches and a
-shuffle of one sufficient-statistics row per partition — broadcast of the
-parameter vector is implicit in literal folding (use
+exact double literals (``determinism.sql_lit``), which Catalyst constant-folds
+into codegen — a few py4j calls per iteration instead of dozens of Column
+calls. The dense solve runs in numpy on the driver (Chu et al. NIPS'06
+summation form). At 100 TB the per-iteration cost is one scan of cached
+columnar batches and a shuffle of one sufficient-statistics row per
+partition — broadcast of the parameter vector is implicit in literal
+folding (use
 ``sparkContext.broadcast`` instead once parameters exceed plan-literal scale,
 e.g. >10^4 features).
 
@@ -40,24 +41,10 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mapreduce_machine_learning_spark.determinism import sql_array, sql_lit
+
 
 # ------------------------------------------------------------- plan helpers
-def _lit(v: float | None) -> str:
-    """SQL text that Spark parses back to exactly the double ``v``: Python's
-    shortest round-trip ``repr`` with a ``D`` suffix, parenthesised when
-    negative so it can follow any operator. NaN and ±inf have no literal
-    form and go through a string cast; None is a typed NULL."""
-    if v is None:
-        return "CAST(NULL AS DOUBLE)"
-    v = float(v)
-    if math.isnan(v):
-        return "CAST('NaN' AS DOUBLE)"
-    if math.isinf(v):
-        return "CAST('Infinity' AS DOUBLE)" if v > 0 else "CAST('-Infinity' AS DOUBLE)"
-    text = f"{v!r}D"
-    return f"({text})" if text.startswith("-") else text
-
-
 def _q(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
@@ -104,7 +91,7 @@ def _times(term: str, *idx: int) -> str:
 def _sigmoid(w: np.ndarray) -> str:
     """The select item ``s`` = σ(wᵀx), with ``x0`` = 1 and wᵀx summed left
     to right."""
-    z = " + ".join([_lit(w[0])] + [f"{_lit(wi)} * x{i}" for i, wi in enumerate(w[1:], 1)])
+    z = " + ".join([sql_lit(w[0])] + [f"{sql_lit(wi)} * x{i}" for i, wi in enumerate(w[1:], 1)])
     return f"1.0D / (1.0D + EXP(-({z}))) AS s"
 
 
@@ -220,7 +207,7 @@ def kmeans_fit(
     with _owned_cache(_project(df, feature_cols)) as pts:
         for _ in range(iters):
             dists = [
-                " + ".join(f"(x{j} - {_lit(cj)}) * (x{j} - {_lit(cj)})" for j, cj in enumerate(cent, 1))
+                " + ".join(f"(x{j} - {sql_lit(cj)}) * (x{j} - {sql_lit(cj)})" for j, cj in enumerate(cent, 1))
                 + f" AS d{i}"
                 for i, cent in enumerate(cents)
             ]
@@ -257,8 +244,8 @@ def gmm_em_1d(df: DataFrame, col: str, init: Gmm1D, iters: int = 5) -> Gmm1D:
     with _owned_cache(_project(df, [col])) as pts:
         for _ in range(iters):
             dens = [
-                f"{_lit(pi)} * EXP(-POWER((x1 - {_lit(mu)}) / {_lit(s)}, 2.0D) / 2.0D)"
-                f" / {_lit(s * math.sqrt(2 * math.pi))} AS p{c}"
+                f"{sql_lit(pi)} * EXP(-POWER((x1 - {sql_lit(mu)}) / {sql_lit(s)}, 2.0D) / 2.0D)"
+                f" / {sql_lit(s * math.sqrt(2 * math.pi))} AS p{c}"
                 for c, (pi, mu, s) in enumerate(zip(params.pi, params.mu, params.sigma), 1)
             ]
             aggs = stats if n is not None else stats + ["count(1) AS n"]
@@ -515,12 +502,11 @@ def knn_classify(
 
     from mapreduce_machine_learning_spark.functions import cosine
 
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
     top = (
         emb.select(
             id_col,
             label_col,
-            cosine(vec_col, q).alias("cos"),
+            cosine(_q(vec_col), sql_array(query_vec)).alias("cos"),
         )
         .orderBy(F.desc("cos"), id_col)
         .limit(k)

@@ -869,7 +869,9 @@ def q_agg_gini(spark, sf_dir):
 
 _FD_CANDIDATES = (
     # (label, table, lhs, rhs) — mixed true/false dependencies so the
-    # check exercises both outcomes
+    # check exercises both outcomes. Every rhs must have an orderable
+    # type: q_profile_fd tests min != max in place of COUNT(DISTINCT)
+    # (tests/test_plans.py::test_profile_fd_rhs_columns_are_orderable)
     ("n_nationkey->n_name", "nation", "n_nationkey", "n_name"),
     ("o_orderkey->o_orderstatus", "orders", "o_orderkey", "o_orderstatus"),
     ("c_nationkey->c_mktsegment", "customer", "c_nationkey", "c_mktsegment"),

@@ -47,7 +47,7 @@ from typing import Callable, NamedTuple
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from mapreduce_machine_learning_spark.determinism import r6
+from mapreduce_machine_learning_spark.determinism import np_r6, r6, sql_array
 from mapreduce_machine_learning_spark.functions import cosine
 from mapreduce_machine_learning_spark.io import load_table as T
 from mapreduce_machine_learning_spark.operators.llm import _materialize
@@ -323,8 +323,8 @@ def _lsh_probe(spark, sf_dir):
     else:
         rows = (
             T(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") == 0)
-            .select(F.col("embedding").cast("array<double>").alias("e"))
+            .filter("vec_id = 0")
+            .selectExpr("CAST(embedding AS ARRAY<DOUBLE>) AS e")
             .collect()
         )
         q = [float(x) for x in rows[0].e] if rows else None
@@ -333,11 +333,10 @@ def _lsh_probe(spark, sf_dir):
         sig = next(sig_batches(iter([_probe_batch(q)])))
         qkeys = [int(sig[f"k{b}"].iloc[0]) for b in range(_RP_BANDS)]
     # band b's row is a hit iff its key is the query's key in band b
-    hit = (
-        F.col("band_key")
-        == F.element_at(F.array(*map(F.lit, qkeys)), F.col("band_id") + 1)
+    hit = F.expr(
+        f"band_key = element_at(array({', '.join(map(str, qkeys))}), band_id + 1)"
         if qkeys
-        else F.lit(False)
+        else "false"
     )
     return _Probe(_make_lsh_probe_kernel(qkeys), _bands, _BANDS_MEMO, hit, q)
 
@@ -362,8 +361,10 @@ def _knn_top10(spark, sf_dir, probe):
     reading an index already built is as fast as the one pass or faster
     (up to 2.4x).
 
-    The rerank is the JVM `cosine` fold with the query as a literal double
-    array, so the reported cos_sim values do not depend on the path."""
+    The rerank is the JVM `cosine` fold with the query as one literal
+    double array (`sql_array`; a typed null when there is no vec 0, so
+    neither path keeps a row), so the reported cos_sim values do not
+    depend on the path."""
     if is_built(spark, sf_dir, probe.key):
         ids = probe.index(spark, sf_dir).filter(
             probe.hit & (F.col("vec_id") != 0)
@@ -375,10 +376,7 @@ def _knn_top10(spark, sf_dir, probe):
         )
     else:
         cand = _probe_scan(spark, sf_dir, probe.kernel)
-    if probe.q is None:  # no vec 0, so neither path keeps a row
-        qv = F.lit(None).cast("array<double>")
-    else:
-        qv = F.array(*[F.lit(x) for x in probe.q])
+    qv = sql_array(probe.q)
     return (
         cand.select("vec_id", r6(cosine("embedding", qv)).alias("cos_sim"))
         .orderBy(F.desc("cos_sim"), "vec_id")
@@ -558,11 +556,6 @@ def make_cell_probe_kernel(centroids, nprobe=_IVF_NPROBE, strict=False):
         import numpy as np
         import pandas as pd
 
-        def np_r6(x):
-            # determinism.np_r6, restated so the pickled kernel never
-            # imports the package on a worker (test_probe_kernels_self_contained)
-            return np.copysign(np.floor(np.abs(x) * 1e6 + 0.5) / 1e6, x)
-
         cid_arr = np.array([int(c) for c, _ in centroids], dtype="int64")
         C = np.array([v for _, v in centroids], dtype="float64")
         cn = np.linalg.norm(C, axis=1, keepdims=True)
@@ -607,8 +600,8 @@ def ivf_centroid_rows(spark, sf_dir):
     IVF query ships)."""
     emb = T(spark, sf_dir, "embeddings")
     rows = (
-        emb.filter(F.col("vec_id").isin(list(_IVF_CENTROID_IDS)))
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
+        emb.filter(f"vec_id IN ({_IVF_IDS_SQL})")
+        .selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS e")
         .collect()
     )
     return sorted((int(r.vec_id), [float(x) for x in r.e]) for r in rows)
@@ -623,7 +616,7 @@ def centroid_frame(emb):
 
     if "nrm" not in emb.columns:
         emb = emb.withColumn("nrm", l2norm("e"))
-    return emb.filter(F.col("vec_id").isin(list(_IVF_CENTROID_IDS))).select(
+    return emb.filter(f"vec_id IN ({_IVF_IDS_SQL})").select(
         F.col("vec_id").alias("cid"),
         F.col("e").alias("ce"),
         F.col("nrm").alias("cnrm"),
@@ -836,7 +829,7 @@ def _ivf_probe(spark, sf_dir):
     if q is not None:
         rank = make_cell_probe_kernel(rows, nprobe=_IVF_NPROBE, strict=True)
         probed = next(rank(iter([_probe_batch(q)])))["cid"].tolist()
-    hit = F.col("cid").isin(probed) if probed else F.lit(False)
+    hit = F.expr(f"cid IN ({', '.join(map(str, probed))})" if probed else "false")
     return _Probe(
         _make_ivf_probe_kernel(rows, probed), _ivf_cells, _CELLS_MEMO, hit, q
     )

@@ -105,9 +105,12 @@ def _make_band_kernel(seeds, n_bands, rows_per_band):
     of its tokens' digest ranks (`np.minimum.reduceat` over the
     doc-contiguous token runs), mapped back to the digest. Hex digests
     have equal length, so rank order is the byte order Spark's and
-    DuckDB's MIN use. Splitting on " " keeps empty tokens exactly like
-    Spark's `split`. Built as a closure so Spark ships it by value and
-    the Python workers never import this package."""
+    DuckDB's MIN use. Band keys are md5'd once per DISTINCT tuple of
+    rows_per_band signature ranks (`np.unique(axis=0)`): sf0.1's 5,000
+    docs hold 257-371 distinct tuples per band. Splitting on " " keeps
+    empty tokens exactly like Spark's `split`. Built as a closure so
+    Spark ships it by value and the Python workers never import this
+    package."""
 
     def kernel(it):
         import hashlib
@@ -133,33 +136,40 @@ def _make_band_kernel(seeds, n_bands, rows_per_band):
                 ]
             )  # (seeds, vocab)
             order = np.argsort(digests, axis=1)
+            by_rank = np.take_along_axis(digests, order, axis=1)
             # one seed at a time: peak memory is one token-length vector,
             # not a (seeds × tokens) matrix
-            sigs = np.empty((len(seeds), len(pdf)), dtype=digests.dtype)
+            min_rank = np.empty((len(pdf), len(seeds)), dtype=np.int32)
             for s in range(len(seeds)):
                 rank = np.empty(len(vocab), dtype=np.int32)
                 rank[order[s]] = np.arange(len(vocab), dtype=np.int32)
-                min_rank = np.minimum.reduceat(rank[codes], starts)
-                sigs[s] = digests[s, order[s, min_rank]]
-            keys = [
-                hashlib.md5("".join(row).encode()).hexdigest()
-                for b in range(n_bands)
-                for row in sigs[b * rows_per_band : (b + 1) * rows_per_band].T
-            ]
+                min_rank[:, s] = np.minimum.reduceat(rank[codes], starts)
+            keys = []
+            for b in range(n_bands):
+                lo = b * rows_per_band
+                tuples, inverse = np.unique(
+                    min_rank[:, lo : lo + rows_per_band], axis=0, return_inverse=True
+                )
+                sigs = [by_rank[lo + i, tuples[:, i]] for i in range(rows_per_band)]
+                hashed = np.array(
+                    [hashlib.md5("".join(t).encode()).hexdigest() for t in zip(*sigs)],
+                    dtype=object,
+                )
+                keys.append(hashed[inverse.reshape(-1)])
             yield pd.DataFrame(
                 {
                     "doc_id": np.tile(pdf["doc_id"].to_numpy(), n_bands),
                     "band_id": np.repeat(
                         np.arange(n_bands, dtype=np.int32), len(pdf)
                     ),
-                    "band_key": keys,
+                    "band_key": np.concatenate(keys),
                 }
             )
 
     return kernel
 
 
-# the engine's band kernel; `_bands` is its only production caller and
+# the engine's band kernel; `_band_frame` is its only production caller and
 # tests/test_minhash_kernel.py pins it to `minhash_band_keys`
 minhash_band_batches = _make_band_kernel(SEEDS, N_BANDS, ROWS_PER_BAND)
 
@@ -178,17 +188,30 @@ from mapreduce_machine_learning_spark.runtime import (  # noqa: E402
 )
 
 
-def _bands(spark, sf_dir, by_doc=False):
+def _band_frame(spark, sf_dir):
     """(doc_id, band_id, band_key), N_BANDS rows per doc: one
-    `minhash_band_batches` pass over the scan's own split. No repartition
-    ahead of it — the kernel needs no co-location, and on local[4] the
-    same kernel behind a 64-way doc_id repartition took 5.2 s per cold
-    sf0.1 collect (64 Python tasks) vs 0.65 s on the scan split. A
-    one-row-group parquet file is one non-empty split, so the kernel runs
-    as one Python task; it still beats the old 4-core JVM plan at 64x the
-    scaling corpus (band table 25 s vs 40 s, CHANGES.md).
-    Materialized once per session: 4 rows/doc of (id, band, 32-char
-    key).
+    `minhash_band_batches` pass over the scan's own split, unpersisted.
+    No repartition ahead of it — the kernel needs no co-location, and on
+    local[4] the same kernel behind a 64-way doc_id repartition took
+    5.2 s per cold sf0.1 collect (64 Python tasks) vs 0.65 s on the scan
+    split. A one-row-group parquet file is one non-empty split, so the
+    kernel runs as one Python task; it still beats the old 4-core JVM
+    plan at 64x the scaling corpus (band table 25 s vs 40 s,
+    CHANGES.md)."""
+    return (
+        T(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .mapInPandas(minhash_band_batches, schema=BANDS_SCHEMA)
+    )
+
+
+def _bands(spark, sf_dir, by_doc=False):
+    """`_band_frame`'s rows, materialized once per session (4 rows/doc of
+    id, band and 32-char key) for the consumers that read the table more
+    than once: near-dup pairs, incremental dedup, dup sources and the
+    streaming probe (q_llm_dup_sources reads it through the near-dup
+    pairs). `q_llm_minhash` never persists it, but reads it through
+    Spark's cache matching when one of these has.
 
     ``by_doc=True`` gives the same rows hash-partitioned on doc_id, for
     the near-dup band self-join: a broadcast band join keeps its stream
@@ -198,15 +221,9 @@ def _bands(spark, sf_dir, by_doc=False):
     materialized too, so the exchange runs once per session; 2× the
     default parallelism, floored at 64, keeps the distinct spread over
     the cluster."""
-
-    def build():
-        return (
-            T(spark, sf_dir, "documents")
-            .select("doc_id", "text")
-            .mapInPandas(minhash_band_batches, schema=BANDS_SCHEMA)
-        )
-
-    bands = _materialize(spark, sf_dir, "bands", build)
+    bands = _materialize(
+        spark, sf_dir, "bands", lambda: _band_frame(spark, sf_dir)
+    )
     if not by_doc:
         return bands
     n_parts = max(64, 2 * spark.sparkContext.defaultParallelism)
@@ -259,9 +276,15 @@ def q_llm_minhash(spark, sf_dir):
     The md5-based hash family makes signatures engine-portable. Pipeline:
     one `minhash_band_batches` map over the document scan (signatures and
     band keys, no shuffle) → band groupBy (the plan's only exchange);
-    nothing ever compares all pairs."""
+    nothing ever compares all pairs.
+
+    The kernel's output streams straight into the aggregate, unpersisted:
+    one pass reads the rows once, so a memo write would only add a cache
+    build that nothing reads. If the session has persisted `_bands`,
+    Spark's CacheManager matches this same plan and reads the cached rows
+    instead of running the kernel."""
     return (
-        _bands(spark, sf_dir)
+        _band_frame(spark, sf_dir)
         .groupBy("band_id", "band_key")
         .agg(F.count(F.lit(1)).alias("group_size"))
         .filter(F.col("group_size") > 1)
@@ -680,6 +703,63 @@ _QUERIES_NEARDUP_SQL = _registered_oracles["q_llm_neardup_pairs"]
 _BLOCK_CAP = 256  # max vectors per BLAS sub-block (bounds task memory)
 
 
+def _make_score_kernel(min_cos, per_group_top=None):
+    """The `_blocked_cosine_pairs` group kernel (`applyInPandas`, schema
+    blk long, ia long, ib long, cos double): one chunk pair's gram matrix,
+    cut to round-6 cos > min_cos and, with ``per_group_top``, to the
+    group's top-k. Built as a closure so Spark ships it by value, with
+    `np_r6` (which `determinism` builds to ship by value too), and the
+    Python workers never import this package."""
+
+    def score(pdf):
+        import numpy as np
+        import pandas as pd
+
+        A = pdf[pdf["side"] == 0]
+        MA = np.stack(A["vec"].to_numpy()).astype("float64")
+        na = np.sqrt((MA * MA).sum(axis=1))
+        B = pdf[pdf["side"] == 1]
+        if len(B):
+            MB = np.stack(B["vec"].to_numpy()).astype("float64")
+            nb = np.sqrt((MB * MB).sum(axis=1))
+            C = (MA @ MB.T) / np.outer(na, nb)
+            # threshold on the ROUND-6 cosine, like every other similarity
+            # cut in this engine: the oracles compare ROUND(cos, 6) too, so
+            # an ulp-level BLAS-vs-DuckDB difference at the boundary cannot
+            # flip pair membership (ADVICE round 2). np_r6 rounds half away
+            # from zero to match F.round/DuckDB ROUND — np.round's
+            # half-to-even would diverge on exact midpoints (ADVICE round 3)
+            ii, jj = np.nonzero(np_r6(C) > min_cos)
+            ia = A["vid"].to_numpy()[ii]
+            ib = B["vid"].to_numpy()[jj]
+            cos = C[ii, jj]
+        else:
+            C = (MA @ MA.T) / np.outer(na, na)
+            iu, ju = np.triu_indices(len(MA), k=1)
+            keep = np_r6(C[iu, ju]) > min_cos
+            ia = A["vid"].to_numpy()[iu[keep]]
+            ib = A["vid"].to_numpy()[ju[keep]]
+            cos = C[iu, ju][keep]
+        lo, hi = np.minimum(ia, ib), np.maximum(ia, ib)
+        if per_group_top is not None and len(lo) > per_group_top:
+            # top-k under (r6(cos) DESC, ia, ib) — the SAME total order the
+            # global consumer sorts by, which is what makes the per-group
+            # cut lossless (`_blocked_cosine_pairs`); np.lexsort keys
+            # are listed last-key-primary
+            sel = np.lexsort((hi, lo, -np_r6(cos)))[:per_group_top]
+            lo, hi, cos = lo[sel], hi[sel], cos[sel]
+        return pd.DataFrame(
+            {
+                "blk": np.full(len(lo), pdf["blk"].iloc[0], dtype="int64"),
+                "ia": lo,
+                "ib": hi,
+                "cos": cos,
+            }
+        )
+
+    return score
+
+
 def _blocked_cosine_pairs(df, min_cos, cap=_BLOCK_CAP, per_group_top=None):
     """Within-block cosine pairs (blk, ia, ib, cos) with round-6 cos >
     min_cos, scored as CHUNK-PAIR gram matrices so task memory is bounded.
@@ -711,8 +791,6 @@ def _blocked_cosine_pairs(df, min_cos, cap=_BLOCK_CAP, per_group_top=None):
     multiply), memory per task is O(cap·dim), and the n² flops spread over
     nchunks² tasks. The min_cos prefilter runs inside numpy so only
     qualifying pairs cross Arrow back to the JVM."""
-    import pandas as pd
-
     w = Window.partitionBy("blk")
     nchunks = F.greatest(
         F.lit(1), F.ceil(F.count(F.lit(1)).over(w) / F.lit(cap))
@@ -778,55 +856,13 @@ def _blocked_cosine_pairs(df, min_cos, cap=_BLOCK_CAP, per_group_top=None):
         )
     )
 
-    def _score(pdf):
-        import numpy as np
-
-        A = pdf[pdf["side"] == 0]
-        MA = np.stack(A["vec"].to_numpy()).astype("float64")
-        na = np.sqrt((MA * MA).sum(axis=1))
-        B = pdf[pdf["side"] == 1]
-        if len(B):
-            MB = np.stack(B["vec"].to_numpy()).astype("float64")
-            nb = np.sqrt((MB * MB).sum(axis=1))
-            C = (MA @ MB.T) / np.outer(na, nb)
-            # threshold on the ROUND-6 cosine, like every other similarity
-            # cut in this engine: the oracles compare ROUND(cos, 6) too, so
-            # an ulp-level BLAS-vs-DuckDB difference at the boundary cannot
-            # flip pair membership (ADVICE round 2). np_r6 rounds half away
-            # from zero to match F.round/DuckDB ROUND — np.round's
-            # half-to-even would diverge on exact midpoints (ADVICE round 3)
-            ii, jj = np.nonzero(np_r6(C) > min_cos)
-            ia = A["vid"].to_numpy()[ii]
-            ib = B["vid"].to_numpy()[jj]
-            cos = C[ii, jj]
-        else:
-            C = (MA @ MA.T) / np.outer(na, na)
-            iu, ju = np.triu_indices(len(MA), k=1)
-            keep = np_r6(C[iu, ju]) > min_cos
-            ia = A["vid"].to_numpy()[iu[keep]]
-            ib = A["vid"].to_numpy()[ju[keep]]
-            cos = C[iu, ju][keep]
-        lo, hi = np.minimum(ia, ib), np.maximum(ia, ib)
-        if per_group_top is not None and len(lo) > per_group_top:
-            # top-k under (r6(cos) DESC, ia, ib) — the SAME total order the
-            # global consumer sorts by, which is what makes the per-group
-            # cut lossless (docstring); np.lexsort keys are listed
-            # last-key-primary
-            sel = np.lexsort((hi, lo, -np_r6(cos)))[:per_group_top]
-            lo, hi, cos = lo[sel], hi[sel], cos[sel]
-        return pd.DataFrame(
-            {
-                "blk": np.full(len(lo), pdf["blk"].iloc[0], dtype="int64"),
-                "ia": lo,
-                "ib": hi,
-                "cos": cos,
-            }
-        )
-
     return (
         asg_a.unionByName(asg_b)
         .groupBy("blk", "ci", "cj")
-        .applyInPandas(_score, schema="blk long, ia long, ib long, cos double")
+        .applyInPandas(
+            _make_score_kernel(min_cos, per_group_top),
+            schema="blk long, ia long, ib long, cos double",
+        )
     )
 
 

@@ -18,8 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from mapreduce_machine_learning_spark.determinism import r6
-from mapreduce_machine_learning_spark.functions import cosine
+from mapreduce_machine_learning_spark.determinism import r6, r6_sql
+from mapreduce_machine_learning_spark.functions import cosine, cosine_sql
 from mapreduce_machine_learning_spark.io import load_table as T
 from mapreduce_machine_learning_spark.registry import query
 from mapreduce_machine_learning_spark.runtime import checkpoint as _ckpt
@@ -488,14 +488,9 @@ def q_ann_ivf(spark, sf_dir):
     )
     # per vector: all 4 round-6 cell cosines in one map pass, argmax by
     # (cos DESC, cid ASC) as the struct-max of (cos, -cid)
-    best = F.array_max(
-        F.transform(
-            "cents",
-            lambda c: F.struct(
-                r6(cosine("embedding", c["cemb"])).alias("cos"),
-                (-c["cid"]).alias("negcid"),
-            ),
-        )
+    cos_c = r6_sql(cosine_sql("embedding", "c.cemb"))
+    best = F.expr(
+        f"array_max(transform(cents, c -> struct({cos_c} AS cos, -c.cid AS negcid)))"
     )
     assigned = emb.crossJoin(F.broadcast(cents)).select(
         "vec_id", "embedding", (-best["negcid"]).alias("cid")
@@ -506,23 +501,9 @@ def q_ann_ivf(spark, sf_dir):
         emb.filter(F.col("vec_id") == 0)
         .crossJoin(F.broadcast(cents))
         .select(
-            F.transform(
-                F.slice(
-                    F.array_sort(
-                        F.transform(
-                            "cents",
-                            lambda c: F.struct(
-                                (-r6(cosine("embedding", c["cemb"]))).alias(
-                                    "negcos"
-                                ),
-                                c["cid"].alias("cid"),
-                            ),
-                        )
-                    ),
-                    1,
-                    2,
-                ),
-                lambda s: s["cid"],
+            F.expr(
+                "transform(slice(array_sort(transform(cents, c -> struct("
+                f"-{cos_c} AS negcos, c.cid AS cid))), 1, 2), s -> s.cid)"
             ).alias("probe_cids"),
             F.col("embedding").alias("qe"),
         )

@@ -67,7 +67,10 @@ def is_built(spark: SparkSession, sf_dir: str, key: str) -> bool:
     partition. An entry alone only says some plan was built over it
     (persist is lazy), so a consumer choosing between reading the memo and
     re-deriving its rows asks this instead. Always False under
-    plan_audit_mode, which memoizes nothing."""
+    plan_audit_mode, which memoizes nothing (an entry filled before the
+    mode was set does not count either)."""
+    if _AUDIT_MODE:
+        return False
     df = _MATERIALIZED.get((spark.sparkContext.applicationId, sf_dir, key))
     if df is None:
         return False

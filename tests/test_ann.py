@@ -209,17 +209,21 @@ def test_knn_candidates_match_index(spark, sf_dir):
 
 
 def test_probe_kernels_self_contained(tmp_path):
-    """The kNN probe kernels ship BY VALUE: unpickled in a fresh
-    interpreter that cannot import this package (as a local-mode worker
-    started outside the checkout cannot), they must run and keep the same
-    rows as in-process."""
-    import ast
+    """The Arrow kernels ship BY VALUE: unpickled in a fresh interpreter
+    that cannot import this package (as a local-mode worker started
+    outside the checkout cannot), they must run and emit the same frames
+    as in-process. Covers both kNN probes, the MinHash band kernel and
+    the blocked-cosine group kernel (both of its branches and the
+    per-group top-k cut)."""
+    import pickle
     import subprocess
     import sys
 
     import numpy as np
     import pandas as pd
     from pyspark import cloudpickle
+
+    from mapreduce_machine_learning_spark.operators import llm
 
     rng = np.random.default_rng(7)
     vecs = rng.normal(size=(200, ann._RP_DIM))
@@ -232,33 +236,61 @@ def test_probe_kernels_self_contained(tmp_path):
     sig = next(ann.sig_batches(iter([batch.head(1)])))
     qkeys = [int(sig[f"k{b}"].iloc[0]) for b in range(ann._RP_BANDS)]
     rows = [(c, [float(x) for x in vecs[c]]) for c in range(ann._IVF_K)]
-    kernels = [
-        ann._make_lsh_probe_kernel(qkeys),
-        ann._make_ivf_probe_kernel(rows, [0, 3, 5, 9]),
-    ]
-    want = [
-        sorted(int(v) for pdf in k(iter([batch])) for v in pdf.vec_id)
-        for k in kernels
-    ]
-    assert all(want)
+    docs = pd.DataFrame(
+        {
+            "doc_id": pd.Series(np.arange(6), dtype="int64"),
+            "text": ["a b", "b a a", None, "é 中 x", "", "a  b"],
+        }
+    )
 
-    blob = tmp_path / "kernels.pkl"
-    blob.write_bytes(cloudpickle.dumps((kernels, batch)))
+    def group(n_a, n_b):
+        side = np.repeat([0, 1], [n_a, n_b])
+        return pd.DataFrame(
+            {
+                "blk": np.zeros(n_a + n_b, dtype="int64"),
+                "ci": np.zeros(n_a + n_b, dtype="int64"),
+                "cj": np.full(n_a + n_b, int(n_b > 0), dtype="int64"),
+                "side": side.astype("int32"),
+                "vid": np.arange(n_a + n_b, dtype="int64"),
+                "vec": list(vecs[: n_a + n_b].astype("float32")),
+            }
+        )
+
+    # (kernel, input, True for an iterator kernel, False for a group kernel)
+    cases = [
+        (ann._make_lsh_probe_kernel(qkeys), batch, True),
+        (ann._make_ivf_probe_kernel(rows, [0, 3, 5, 9]), batch, True),
+        (llm.minhash_band_batches, docs, True),
+        (llm._make_score_kernel(0.0), group(40, 30), False),
+        (llm._make_score_kernel(-2.0, per_group_top=5), group(40, 0), False),
+    ]
+
+    def run(kernel, pdf, batched):
+        if not batched:
+            return kernel(pdf)
+        return pd.concat(list(kernel(iter([pdf]))), ignore_index=True)
+
+    want = [run(*c) for c in cases]
+    assert all(len(w) for w in want)
+
+    blob, out = tmp_path / "kernels.pkl", tmp_path / "out.pkl"
+    blob.write_bytes(cloudpickle.dumps((cases, run)))
     code = (
         "import pickle, sys\n"
         "sys.modules['mapreduce_machine_learning_spark'] = None\n"
-        f"kernels, batch = pickle.load(open({str(blob)!r}, 'rb'))\n"
-        "print([sorted(int(v) for pdf in k(iter([batch])) for v in pdf.vec_id)"
-        " for k in kernels])\n"
+        f"cases, run = pickle.load(open({str(blob)!r}, 'rb'))\n"
+        f"pickle.dump([run(*c) for c in cases], open({str(out)!r}, 'wb'))\n"
     )
-    out = subprocess.run(
+    subprocess.run(
         [sys.executable, "-c", code],
         cwd=tmp_path,
         capture_output=True,
         text=True,
         check=True,
-    ).stdout
-    assert ast.literal_eval(out) == want
+    )
+    got = pickle.loads(out.read_bytes())
+    for g, w in zip(got, want, strict=True):
+        pd.testing.assert_frame_equal(g, w)
 
 
 def test_ivf_recall_and_pruning(spark):

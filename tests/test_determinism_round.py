@@ -1,5 +1,7 @@
 """np_r6 (the Arrow-kernel rounding used by the blocked-cosine threshold
-cut, llm.py) must be the SAME function as the oracle's DuckDB ``ROUND(x,6)``
+cut, `llm._make_score_kernel`, and the IVF cell ranking,
+`ann.make_cell_probe_kernel`; both call this one definition, which ships by
+value) must be the SAME function as the oracle's DuckDB ``ROUND(x,6)``
 — half away from zero, not numpy's half-to-even — so an exact-midpoint
 cosine cannot flip pair membership cross-engine (ADVICE round 3).
 

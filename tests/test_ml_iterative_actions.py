@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_machine_learning_spark import ml_iterative as mli
+from mapreduce_machine_learning_spark.determinism import sql_lit
 from mapreduce_machine_learning_spark.io import load_table
 from tests.conftest import SF_DIR
 
@@ -142,15 +143,15 @@ def test_gaussian_nb_fit_is_one_sql_execution(spark):
           math.nan, math.inf, -math.inf]
 )
 def test_double_literal_round_trips_bit_exactly(spark, v):
-    got = spark.sql(f"SELECT {mli._lit(v)} AS v").collect()[0]["v"]
+    got = spark.sql(f"SELECT {sql_lit(v)} AS v").collect()[0]["v"]
     assert struct.pack("<d", got) == struct.pack("<d", v)
     # negative literals must survive following a binary operator
-    got = spark.sql(f"SELECT 1.0D * {mli._lit(v)} AS v").collect()[0]["v"]
+    got = spark.sql(f"SELECT 1.0D * {sql_lit(v)} AS v").collect()[0]["v"]
     assert struct.pack("<d", got) == struct.pack("<d", 1.0 * v)
 
 
 def test_null_literal_is_a_typed_null(spark):
-    row = spark.sql(f"SELECT {mli._lit(None)} AS v").collect()[0]
+    row = spark.sql(f"SELECT {sql_lit(None)} AS v").collect()[0]
     assert row["v"] is None
 
 

@@ -335,6 +335,23 @@ def test_profile_fd_single_group_exchange(spark):
             assert not ("l_orderkey" in line and "l_returnflag" in line), line
 
 
+def test_profile_fd_rhs_columns_are_orderable(spark):
+    # q_profile_fd's violation test min(Y) != max(Y) equals
+    # COUNT(DISTINCT Y) > 1 only for an orderable Y; a candidate with a
+    # map or variant rhs would fail at analysis or break that equivalence
+    from mapreduce_machine_learning_spark.io import load_table
+    from mapreduce_machine_learning_spark.operators.aggregation import (
+        _FD_CANDIDATES,
+    )
+
+    ordering = spark._jvm.org.apache.spark.sql.catalyst.expressions.RowOrdering
+    for label, table, _, rhs in _FD_CANDIDATES:
+        dt = load_table(spark, SF_DIR, table)._jdf.schema().apply(rhs).dataType()
+        assert ordering.isOrderable(dt), (label, dt.simpleString())
+    map_type = spark.sql("SELECT map(1, 2) AS m")._jdf.schema().apply("m").dataType()
+    assert not ordering.isOrderable(map_type)
+
+
 def test_cooccur_baskets_without_selfjoin(spark):
     # r14: baskets are collect_set aggregates and pairs are generated
     # in-array — the basket-key self-join (and any shuffled join) must
