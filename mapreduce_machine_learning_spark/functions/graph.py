@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mapreduce_machine_learning_spark.io import worker_prelude
+
 
 SMALL_GRAPH_EDGES = 2_000_000  # ≈ a few tens of MB symmetrized: broadcastable
 
@@ -58,6 +60,7 @@ def _components_single_task(sym: DataFrame) -> DataFrame:
     cap = SMALL_GRAPH_EDGES
 
     def uf(batches):
+        worker_prelude()
         parent: dict = {}
         n_edges = 0
 

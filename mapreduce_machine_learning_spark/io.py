@@ -61,11 +61,19 @@ def _ship_package(spark: SparkSession) -> None:
     equivalent of ``spark-submit --py-files engine.zip``. Arrow UDF
     closures that reference package-level helpers are cloudpickled BY
     REFERENCE (module path), so they deserialize on an executor only if
-    the package is importable there. Under ``local[*]`` the workers
-    inherit the driver's ``sys.path`` and this is a no-op; under any
-    multi-JVM master (``local-cluster`` — the multi-executor test rig —
-    standalone, YARN, k8s) the zip rides Spark's file server to every
-    executor. One zip per process, one ``addPyFile`` per application."""
+    the package is importable there. Under any multi-JVM master
+    (``local-cluster`` — the multi-executor test rig — standalone, YARN,
+    k8s) the zip rides Spark's file server to every executor. Local
+    masters skip it, and not because their workers inherit the driver's
+    ``sys.path`` (they do not: they import from the JVM's working
+    directory). The query kernels are self-contained by construction:
+    closures that cloudpickle ships by value, helpers included
+    (`determinism.np_r6`, `worker_prelude`), as
+    tests/test_ann.py::test_probe_kernels_self_contained pins. The
+    media-source kernels of ``sources/multimodal.py`` still call package
+    codecs, so under a local master they need the JVM started from the
+    checkout root. One zip per process, one ``addPyFile`` per
+    application."""
     sc = spark.sparkContext
     if sc.applicationId in _SHIPPED:
         return
@@ -108,6 +116,63 @@ def _unlink_quiet(path: str) -> None:
         os.unlink(path)
     except OSError:
         pass
+
+
+def _make_worker_prelude():
+    def worker_prelude():
+        """First statement of every Arrow kernel the engine ships.
+
+        Before each task, PySpark's worker calls
+        ``importlib.invalidate_caches()`` (``worker_util.setup_spark_files``),
+        and on Python 3.11 every ``zipimporter`` then re-reads its whole
+        archive; a worker holds one per ``pyspark.zip`` package path.
+        Skipping those re-reads took a 1-row ``mapInPandas`` job from 110
+        to 78 ms on a 4-vCPU host. Once per worker process this replaces
+        ``zipimporter.invalidate_caches`` with a version that re-reads an
+        archive only when its ``(st_ino, st_size, st_mtime_ns)`` differs
+        from the last read, so a rewritten zip is still picked up. The install stamps every
+        cached importer with its archive's current stat: it runs inside a
+        task, just after that task's own ``invalidate_caches()`` re-read
+        every archive. Outside a task (a kernel called on the driver) it
+        does nothing, so the driver's import machinery is left alone."""
+        import zipimport
+
+        if getattr(zipimport.zipimporter.invalidate_caches, "stat_gated", False):
+            return
+        from pyspark import TaskContext
+
+        if TaskContext.get() is None:
+            return
+        import os
+        import sys
+
+        reread = zipimport.zipimporter.invalidate_caches
+
+        def stamp(archive):
+            try:
+                st = os.stat(archive)
+            except OSError:
+                return None
+            return (st.st_ino, st.st_size, st.st_mtime_ns)
+
+        def invalidate_caches(self):
+            now = stamp(self.archive)
+            if now is None or getattr(self, "_read_stamp", None) != now:
+                reread(self)
+                self._read_stamp = now
+
+        invalidate_caches.stat_gated = True
+        for finder in list(sys.path_importer_cache.values()):
+            if isinstance(finder, zipimport.zipimporter):
+                finder._read_stamp = stamp(finder.archive)
+        zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+    return worker_prelude
+
+
+# Built in a factory, so cloudpickle ships it by value inside every kernel
+# that calls it and no Python worker imports this package for it.
+worker_prelude = _make_worker_prelude()
 
 
 # ``spark.read.parquet`` pays ~150 ms of driver-side file listing + footer

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mapreduce_machine_learning_spark.determinism import sql_array, sql_lit
+from mapreduce_machine_learning_spark.io import worker_prelude
 
 
 # ------------------------------------------------------------- plan helpers
@@ -603,6 +604,7 @@ def bpe_train(docs: DataFrame, text_col: str = "text", n_merges: int = 5):
         # cannot evaluate against a function-local pandas import
         @pandas_udf("array<string>", PandasUDFType.SCALAR)
         def _merge(col: "pd.Series") -> "pd.Series":
+            worker_prelude()
             out = []
             for arr in col:
                 res, i, n = [], 0, len(arr)

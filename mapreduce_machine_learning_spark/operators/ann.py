@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_machine_learning_spark.determinism import np_r6, r6, sql_array
 from mapreduce_machine_learning_spark.functions import cosine
-from mapreduce_machine_learning_spark.io import load_table as T
+from mapreduce_machine_learning_spark.io import load_table as T, worker_prelude
 from mapreduce_machine_learning_spark.operators.llm import _materialize
 from mapreduce_machine_learning_spark.registry import query
 from mapreduce_machine_learning_spark.runtime import is_audit_mode, is_built
@@ -82,6 +82,7 @@ def _make_sig_kernel(signs, bits, bands):
     (tests/test_ann.py::test_band_width_dial exercises 4 vs 12 bits)."""
 
     def kernel(it):
+        worker_prelude()
         import numpy as np
         import pandas as pd
 
@@ -298,6 +299,7 @@ def _make_lsh_probe_kernel(qkeys):
     query's in at least one band. Empty ``qkeys`` keeps nothing."""
 
     def kernel(it):
+        worker_prelude()
         import numpy as np
 
         for pdf in it:
@@ -553,6 +555,7 @@ def make_cell_probe_kernel(centroids, nprobe=_IVF_NPROBE, strict=False):
     by tests/test_ann.py::test_assign_paths_agree_on_zero_norm_vector."""
 
     def kernel(it):
+        worker_prelude()
         import numpy as np
         import pandas as pd
 
@@ -797,6 +800,7 @@ def _make_ivf_probe_kernel(centroids, probed):
     assign = make_cell_probe_kernel(centroids, nprobe=1, strict=True)
 
     def kernel(it):
+        worker_prelude()
         import numpy as np
 
         cells = np.array(probed, dtype="int64")
@@ -835,6 +839,44 @@ def _ivf_probe(spark, sf_dir):
     )
 
 
+def make_components_kernel(a, b, key):
+    """Grouped-map union-find (`applyInPandas` with the group key, schema
+    ``<key> <type>, n_edges long, touched long, comps long``): one row per
+    group of an undirected (a, b) edge list — the group key, its edge
+    count, the distinct nodes its edges touch and their connected
+    components. Built as a closure so Spark ships it by value."""
+
+    def kernel(group, pdf):
+        worker_prelude()
+        import pandas as pd
+
+        parent: dict = {}
+
+        def find(i):
+            while parent[i] != i:
+                parent[i] = parent[parent[i]]
+                i = parent[i]
+            return i
+
+        for u, v in zip(pdf[a], pdf[b]):
+            parent.setdefault(u, u)
+            parent.setdefault(v, v)
+            ru, rv = find(u), find(v)
+            if ru != rv:
+                parent[max(ru, rv)] = min(ru, rv)
+        roots = {find(i) for i in parent}
+        return pd.DataFrame(
+            {
+                key: [group[0]],
+                "n_edges": [len(pdf)],
+                "touched": [len(parent)],
+                "comps": [len(roots)],
+            }
+        )
+
+    return kernel
+
+
 _UF_EDGE_CAP = 2_000_000  # ≈ 32 MB of id pairs: a safe single-task payload
 
 
@@ -860,8 +902,6 @@ def _edge_component_counts(edges, cap=_UF_EDGE_CAP):
     is not an extra pass. Under ``runtime.plan_audit_mode`` the count is
     SKIPPED (audits must trigger no execution) and the audit sees the
     below-cap plan — the documented default path."""
-    import pandas as pd
-
     from mapreduce_machine_learning_spark import runtime
 
     if not runtime.is_audit_mode():
@@ -879,32 +919,13 @@ def _edge_component_counts(edges, cap=_UF_EDGE_CAP):
                 F.countDistinct("comp").alias("comps"),
             )
 
-    def _components(pdf):
-        parent: dict = {}
-
-        def find(i):
-            while parent[i] != i:
-                parent[i] = parent[parent[i]]
-                i = parent[i]
-            return i
-
-        for a, b in zip(pdf["vec_a"], pdf["vec_b"]):
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        roots = {find(i) for i in parent}
-        return pd.DataFrame(
-            {
-                "n_edges": [len(pdf)],
-                "touched": [len(parent)],
-                "comps": [len(roots)],
-            }
+    return (
+        edges.groupBy(F.lit(0).alias("g"))
+        .applyInPandas(
+            make_components_kernel("vec_a", "vec_b", "g"),
+            schema="g int, n_edges long, touched long, comps long",
         )
-
-    return edges.groupBy(F.lit(0).alias("g")).applyInPandas(
-        _components, schema="n_edges long, touched long, comps long"
+        .drop("g")
     )
 
 

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_machine_learning_spark.determinism import np_r6, r6
 from mapreduce_machine_learning_spark.functions import l2norm
-from mapreduce_machine_learning_spark.io import load_table as T
+from mapreduce_machine_learning_spark.io import load_table as T, worker_prelude
 from mapreduce_machine_learning_spark.registry import query
 from mapreduce_machine_learning_spark.runtime import checkpoint as _ckpt
 
@@ -113,6 +113,7 @@ def _make_band_kernel(seeds, n_bands, rows_per_band):
     package."""
 
     def kernel(it):
+        worker_prelude()
         import hashlib
         from itertools import chain
 
@@ -712,6 +713,7 @@ def _make_score_kernel(min_cos, per_group_top=None):
     Python workers never import this package."""
 
     def score(pdf):
+        worker_prelude()
         import numpy as np
         import pandas as pd
 
@@ -1353,7 +1355,9 @@ def q_llm_dedup_semantic(spark, sf_dir):
     faster). The generic cross-block path
     (functions.graph.connected_components) remains the tool for UNblocked
     edge lists (q_graph_components)."""
-    import pandas as pd
+    from mapreduce_machine_learning_spark.operators.ann import (
+        make_components_kernel,
+    )
 
     edges = _blocked_cosine_pairs(
         T(spark, sf_dir, "embeddings").select(
@@ -1364,32 +1368,9 @@ def q_llm_dedup_semantic(spark, sf_dir):
         min_cos=0.39,  # round-6 prefilter; exact 0.4 threshold below
     ).filter(F.round("cos", 6) > 0.4)
 
-    def _components(pdf):
-        parent: dict = {}
-
-        def find(i):
-            while parent[i] != i:
-                parent[i] = parent[parent[i]]
-                i = parent[i]
-            return i
-
-        for a, b in zip(pdf["ia"], pdf["ib"]):
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        roots = {find(i) for i in parent}
-        return pd.DataFrame(
-            {
-                "label": [int(pdf["blk"].iloc[0])],
-                "touched": [len(parent)],
-                "comps": [len(roots)],
-            }
-        )
-
     comp = edges.groupBy("blk").applyInPandas(
-        _components, schema="label int, touched long, comps long"
+        make_components_kernel("ia", "ib", "label"),
+        schema="label int, n_edges long, touched long, comps long",
     )
     counts = (
         T(spark, sf_dir, "embeddings")

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 from mapreduce_machine_learning_spark.determinism import r6
-from mapreduce_machine_learning_spark.io import load_table as T
+from mapreduce_machine_learning_spark.io import load_table as T, worker_prelude
 from mapreduce_machine_learning_spark.registry import query
 
 
@@ -69,6 +69,7 @@ def q_udf_pandas(spark, sf_dir):
 
     @F.pandas_udf("double")
     def weight(value: pd.Series, k: pd.Series) -> pd.Series:
+        worker_prelude()
         return value * (k + 1)
 
     e = T(spark, sf_dir, "events")
@@ -106,6 +107,7 @@ def q_udaf_grouplinfit(spark, sf_dir):
     )
 
     def fit(pdf: pd.DataFrame) -> pd.DataFrame:
+        worker_prelude()
         x, y = pdf["hr"], pdf["value"]
         xm, ym = x.mean(), y.mean()
         sxx = ((x - xm) ** 2).sum()

@@ -72,6 +72,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 
+from mapreduce_machine_learning_spark.io import worker_prelude
 from mapreduce_machine_learning_spark.sources.avi import (
     avi_codec,
     avi_fps,
@@ -820,6 +821,7 @@ def extract_features(media: DataFrame) -> DataFrame:
     the only scalar loop (inherent to variable-length media)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_prelude()
         for pdf in batches:
             yield pd.DataFrame(
                 {
@@ -861,6 +863,7 @@ def describe_media(media: DataFrame) -> DataFrame:
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_prelude()
         for pdf in batches:
             infos = [media_info(p) for p in pdf["payload"]]
             out = pd.DataFrame(
@@ -1225,6 +1228,7 @@ def resize_media(media: DataFrame, width: int, height: int) -> DataFrame:
         return fake_resize(p, width, height)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_prelude()
         for pdf in batches:
             visual = pdf["kind"] != "audio"
             out = pdf[["media_id", "kind"]].copy()
@@ -1295,6 +1299,7 @@ def resample_media(media: DataFrame, target_rate: int = 16000) -> DataFrame:
         return fake_resample(p, target_rate), 0
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_prelude()
         for pdf in batches:
             audio = pdf["kind"] == "audio"
             payloads, durs = [], []
@@ -1354,6 +1359,7 @@ def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
         ]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_prelude()
         for pdf in batches:
             vids = pdf[pdf["kind"] == "video"]
             if vids.empty:

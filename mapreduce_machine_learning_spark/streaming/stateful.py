@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from mapreduce_machine_learning_spark.io import worker_prelude
+
 OUTPUT_SCHEMA = (
     "user_id bigint, session_start_us bigint, session_end_us bigint, events bigint"
 )
@@ -41,6 +43,7 @@ def sessionize_stateful(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        worker_prelude()
         rows = pd.concat(list(pdfs), ignore_index=True)
         # pandas datetime64[ns] → epoch microseconds
         ts_us = (rows["ts"].astype("int64") // 1000).sort_values().to_list()
@@ -99,6 +102,7 @@ def ewma_stateful(daily: DataFrame, alpha: float = 0.3) -> DataFrame:
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
+        worker_prelude()
         rows = pd.concat(list(pdfs), ignore_index=True).sort_values("day_us")
         s = state.get[0] if state.exists else None
         out = []

@@ -212,9 +212,12 @@ def test_probe_kernels_self_contained(tmp_path):
     """The Arrow kernels ship BY VALUE: unpickled in a fresh interpreter
     that cannot import this package (as a local-mode worker started
     outside the checkout cannot), they must run and emit the same frames
-    as in-process. Covers both kNN probes, the MinHash band kernel and
-    the blocked-cosine group kernel (both of its branches and the
-    per-group top-k cut)."""
+    as in-process. Covers both kNN probes, the MinHash band kernel, the
+    blocked-cosine group kernel (both of its branches and the per-group
+    top-k cut), `sig_batches`, the strict cell kernel and the union-find
+    components kernel in both of its configurations. Every kernel calls
+    `io.worker_prelude` first, so the prelude ships by value too."""
+    import functools
     import pickle
     import subprocess
     import sys
@@ -256,6 +259,13 @@ def test_probe_kernels_self_contained(tmp_path):
             }
         )
 
+    edges = pd.DataFrame(
+        {
+            "vec_a": pd.Series([1, 2, 5, 7, 3], dtype="int64"),
+            "vec_b": pd.Series([2, 3, 6, 5, 1], dtype="int64"),
+        }
+    )
+    comps = ann.make_components_kernel
     # (kernel, input, True for an iterator kernel, False for a group kernel)
     cases = [
         (ann._make_lsh_probe_kernel(qkeys), batch, True),
@@ -263,6 +273,14 @@ def test_probe_kernels_self_contained(tmp_path):
         (llm.minhash_band_batches, docs, True),
         (llm._make_score_kernel(0.0), group(40, 30), False),
         (llm._make_score_kernel(-2.0, per_group_top=5), group(40, 0), False),
+        (ann.sig_batches, batch, True),
+        (ann.make_cell_probe_kernel(rows, strict=True), batch, True),
+        (functools.partial(comps("vec_a", "vec_b", "g"), (0,)), edges, False),
+        (
+            functools.partial(comps("ia", "ib", "label"), (3,)),
+            edges.rename(columns={"vec_a": "ia", "vec_b": "ib"}),
+            False,
+        ),
     ]
 
     def run(kernel, pdf, batched):
